@@ -85,6 +85,27 @@ def release_all() -> None:
 
 
 _EXPR_CACHE: dict = {}
+_EXPR_TOKEN: tuple | None = None  # the context every _EXPR_CACHE entry belongs to
+
+
+def _live_cache() -> dict | None:
+    """``_EXPR_CACHE`` for the active SparkContext, or None (uncacheable)
+    when no context is active. Entries are keyed to a restart-unique
+    token — (applicationId, startTime), not ``id()``, which CPython may
+    reuse for a new context at a freed address — and the whole cache is
+    purged when that token changes, so a restarted context neither sees
+    objects bound to the dead py4j gateway nor keeps them alive."""
+    global _EXPR_TOKEN
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    token = (sc.applicationId, sc.startTime)
+    if token != _EXPR_TOKEN:
+        _EXPR_CACHE.clear()
+        _EXPR_TOKEN = token
+    return _EXPR_CACHE
 
 
 def cached_exprs(key: str, builder):
@@ -96,17 +117,14 @@ def cached_exprs(key: str, builder):
     vs 0.4 s to execute). Unresolved Columns reference column NAMES
     only, so one build serves every invocation. This caches expression
     TREES, never data: every invocation still computes from the parquet
-    inputs. Keyed on the live SparkContext so a restarted JVM gateway
-    (whose py4j refs would dangle) rebuilds."""
-    from pyspark import SparkContext
-
-    ctx = id(SparkContext._active_spark_context)
-    hit = _EXPR_CACHE.get(key)
-    if hit is not None and hit[0] == ctx:
-        return hit[1]
-    val = builder()
-    _EXPR_CACHE[key] = (ctx, val)
-    return val
+    inputs. Scoped to the live SparkContext (``_live_cache``) so a
+    restarted JVM gateway (whose py4j refs would dangle) rebuilds."""
+    cache = _live_cache()
+    if cache is None:
+        return builder()
+    if key not in cache:
+        cache[key] = builder()
+    return cache[key]
 
 
 def cached_scan(spark, path: str):
@@ -121,13 +139,10 @@ def cached_scan(spark, path: str):
     write-once source paths (the sf star schema and content-fingerprinted
     staged corpora — paths whose bytes never change within a process);
     read-back-after-write paths must keep calling spark.read directly."""
-    from pyspark import SparkContext
-
-    ctx = id(SparkContext._active_spark_context)
-    key = ("scan", ctx, path)
-    hit = _EXPR_CACHE.get(key)
-    if hit is not None and hit[0] == ctx:
-        return hit[1]
-    val = spark.read.parquet(path)
-    _EXPR_CACHE[key] = (ctx, val)
-    return val
+    cache = _live_cache()
+    if cache is None:
+        return spark.read.parquet(path)
+    key = ("scan", path)
+    if key not in cache:
+        cache[key] = spark.read.parquet(path)
+    return cache[key]

@@ -17,7 +17,11 @@ Scale design:
   shuffle (the distinct). Above the gate, the distributed twin equi-joins
   band tables on (band_idx, band_hash) — two more shuffles, the right
   trade only when the lexicon can't be broadcast;
-- Jaccard verification is a vectorized pandas pass over candidates only.
+- Jaccard verification is a vectorized pandas pass over candidates only;
+- ``LexiconIndex`` precomputes everything linking + canonicalization take
+  from a dimension-scale lexicon (sorted alias keys, band index,
+  representative-applied entity per alias), so the fused mention pass
+  links a batch with numpy alone — no join, no shuffle.
 
 The pandas-level helpers (shingles / signatures / bands) are shared with
 fixtures.py so golden linking output is identical by construction.
@@ -26,6 +30,7 @@ fixtures.py so golden linking output is identical by construction.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -230,102 +235,113 @@ def _segmented_argmax(
     return starts[keep], best[keep]
 
 
+def band_index(keys_sorted: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per-band (sorted band hashes, alias rows) over lexicographically
+    sorted alias keys — the broadcast LSH index of the dimension-scale
+    fuzzy path. ~16 bytes/alias/band instead of hundreds for dict entries
+    (at the 100k-alias gate ~50 MB to every executor instead of several
+    hundred), and candidate lookup is one vectorized searchsorted per
+    band. Alias rows index ``keys_sorted``, so alias-row order IS
+    lexicographic order (the tie-break of ``fuzzy_best_arrays``)."""
+    per_band: list[tuple[np.ndarray, np.ndarray]] = []
+    if len(keys_sorted):
+        bh = band_hashes(keys_sorted)
+        for b in range(bh.shape[1]):
+            order = np.argsort(bh[:, b], kind="stable").astype(np.int64)
+            per_band.append((bh[order, b], order))
+    return per_band
+
+
+def fuzzy_best_arrays(
+    surfaces: np.ndarray,
+    keys_arr: np.ndarray,
+    bands_idx: list[tuple[np.ndarray, np.ndarray]],
+    min_jaccard: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Best fuzzy alias per lowercased surface against a ``band_index``:
+    LSH candidates -> exact Jaccard -> per-surface argmax, all numpy.
+    Returns (surface rows, alias rows, jaccard) for the surfaces whose
+    best candidate reaches ``min_jaccard``; ties go to the
+    lexicographically smallest alias. The shared batch core of
+    ``fuzzy_best_broadcast`` and the fused mention pass
+    (``LexiconIndex.link``)."""
+    n, m = len(surfaces), len(keys_arr)
+    none = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
+    if not n or not m:
+        return none
+    men_b = band_hashes(surfaces)
+    owner_chunks: list[np.ndarray] = []
+    alias_chunks: list[np.ndarray] = []
+    for b, (sorted_h, order) in enumerate(bands_idx):
+        h = men_b[:, b]
+        lo = np.searchsorted(sorted_h, h, side="left")
+        hi = np.searchsorted(sorted_h, h, side="right")
+        cnt = hi - lo
+        total = int(cnt.sum())
+        if not total:
+            continue
+        rep = np.repeat(np.arange(n, dtype=np.int64), cnt)
+        within = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        owner_chunks.append(rep)
+        alias_chunks.append(order[lo[rep] + within])
+    if not owner_chunks:
+        return none
+    # dedupe (owner, alias) across bands; unique() sorts, and since aliases
+    # were pre-sorted lexicographically the pairs come out grouped by owner
+    # with aliases in lexicographic order
+    pair_key = np.unique(
+        np.concatenate(owner_chunks) * np.int64(m) + np.concatenate(alias_chunks)
+    )
+    owners = pair_key // m
+    alias_idx = pair_key % m
+    # ONE vectorized jaccard pass over every candidate pair (the expensive
+    # part); the argmax below touches only the few candidates per surface
+    js = np.asarray(
+        jaccard_pairs(pd.Series(surfaces[owners]), pd.Series(keys_arr[alias_idx])),
+        dtype=np.float64,
+    )
+    o_rows, b_rows = _segmented_argmax(owners, js, float(min_jaccard))
+    return owners[o_rows], alias_idx[b_rows], js[b_rows]
+
+
 def fuzzy_best_broadcast(
     distinct_surfaces: DataFrame,
     lex_keys: list[str],
     min_jaccard: float,
 ) -> DataFrame:
     """Best fuzzy (alias, jaccard) per distinct surface — dimension-scale
-    lexicon path: the lexicon band index ({(band_idx, band_hash) ->
-    aliases}) is built driver-side in one vectorized pass and BROADCAST, so
-    candidate generation + exact-Jaccard verify + per-surface argmax all
-    run inside ONE mapInPandas over the (already shuffled-distinct)
-    surfaces: zero additional shuffles on the fact side. The previous plan
-    (band-explode -> candidate join -> distinct -> row_number window) paid
-    two more shuffles for the same result; the scaling runs measured the
-    linking stage at ~0.5 pair efficiency, and shuffle bytes were the
-    dominant term.
+    lexicon path: the lexicon ``band_index`` is built once, locally, in
+    one vectorized pass and BROADCAST, so candidate generation + exact-Jaccard
+    verify + per-surface argmax (``fuzzy_best_arrays``) all run inside ONE
+    mapInPandas over the (already shuffled-distinct) surfaces: zero
+    additional shuffles on the fact side.
 
     Tie-break identical to the distributed twin and to
     ``link_surfaces_pandas``: highest jaccard, then lexicographically
     smallest alias.
     """
     spark = distinct_surfaces.sparkSession
-    # Broadcast payload is per-band SORTED hash arrays + alias indices (not
-    # a python dict): ~16 bytes/alias/band vs hundreds for dict entries —
-    # at the 100k-alias gate that is ~50 MB to every executor instead of
-    # several hundred, and candidate lookup becomes one vectorized
-    # searchsorted per band. Aliases are pre-sorted lexicographically so
-    # alias-index order IS lexicographic order (the tie-break below).
-    lex_sorted = sorted(lex_keys)
-    per_band: list[tuple[np.ndarray, np.ndarray]] = []
-    if lex_sorted:
-        bh = band_hashes(pd.Series(lex_sorted))
-        for b in range(bh.shape[1]):
-            order = np.argsort(bh[:, b], kind="stable").astype(np.int64)
-            per_band.append((bh[order, b], order))
+    keys_sorted = np.array(sorted(lex_keys), dtype=object)
     from ..caching import track_broadcast
 
     bc = track_broadcast(
-        spark.sparkContext.broadcast(
-            (np.array(lex_sorted, dtype=object), per_band)
-        )
+        spark.sparkContext.broadcast((keys_sorted, band_index(keys_sorted)))
     )
     minj = float(min_jaccard)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keys_arr, bands_idx = bc.value
-        m = len(keys_arr)
         for pdf in batches:
-            n = len(pdf)
-            if not n or m == 0:
-                continue
             surfaces = pdf["surface_key"].to_numpy()
-            men_b = band_hashes(pdf["surface_key"])
-            owner_chunks: list[np.ndarray] = []
-            alias_chunks: list[np.ndarray] = []
-            for b, (sorted_h, order) in enumerate(bands_idx):
-                h = men_b[:, b]
-                lo = np.searchsorted(sorted_h, h, side="left")
-                hi = np.searchsorted(sorted_h, h, side="right")
-                cnt = hi - lo
-                total = int(cnt.sum())
-                if not total:
-                    continue
-                rep = np.repeat(np.arange(n, dtype=np.int64), cnt)
-                within = np.arange(total, dtype=np.int64) - np.repeat(
-                    np.cumsum(cnt) - cnt, cnt
+            s_rows, a_rows, js = fuzzy_best_arrays(surfaces, keys_arr, bands_idx, minj)
+            if len(s_rows):
+                yield pd.DataFrame(
+                    {
+                        "surface_key": surfaces[s_rows],
+                        "alias_key": keys_arr[a_rows],
+                        "jaccard": js,
+                    }
                 )
-                owner_chunks.append(rep)
-                alias_chunks.append(order[lo[rep] + within])
-            if not owner_chunks:
-                continue
-            # dedupe (owner, alias) across bands; unique() sorts, and since
-            # aliases were pre-sorted lexicographically the pairs come out
-            # grouped by owner with aliases in lexicographic order
-            pair_key = np.concatenate(owner_chunks) * np.int64(m) + np.concatenate(
-                alias_chunks
-            )
-            pair_key = np.unique(pair_key)
-            owners = pair_key // m
-            alias_idx = pair_key % m
-            # ONE vectorized jaccard pass over every candidate pair in the
-            # batch (the expensive part); the argmax below touches only the
-            # few candidates per surface
-            js = np.asarray(
-                jaccard_pairs(
-                    pd.Series(surfaces[owners]), pd.Series(keys_arr[alias_idx])
-                ),
-                dtype=np.float64,
-            )
-            o_rows, b_rows = _segmented_argmax(owners, js, minj)
-            yield pd.DataFrame(
-                {
-                    "surface_key": surfaces[owners[o_rows]],
-                    "alias_key": keys_arr[alias_idx[b_rows]],
-                    "jaccard": js[b_rows],
-                }
-            )
 
     return distinct_surfaces.mapInPandas(run, _BEST_SCHEMA)
 
@@ -385,8 +401,7 @@ def fuzzy_best_distributed(
 
 def _dedup_lex(lexicon: DataFrame) -> DataFrame:
     """The lexicon deduped on lowercased alias (deterministic: min
-    entity_id) so the exact join never fans mentions out — shared by
-    ``link_mentions`` and ``collect_lex_rows``."""
+    entity_id) so the exact join never fans mentions out."""
     from pyspark.sql import Window
 
     wl = Window.partitionBy("alias_key").orderBy("entity_id", "canonical")
@@ -403,21 +418,18 @@ def _dedup_lex(lexicon: DataFrame) -> DataFrame:
     )
 
 
-def collect_lex_rows(
-    lexicon: DataFrame, broadcast_lex_cutoff: int = 100_000
-) -> list:
-    """Pre-collect the deduped lexicon rows ONCE for reuse across many
-    ``link_mentions`` calls over the same static lexicon (r6: the
-    incremental pipeline's per-batch fixed cost)."""
-    return _dedup_lex(lexicon).limit(broadcast_lex_cutoff + 1).collect()
+LINK_MIN_JACCARD = 0.5  # fuzzy alias acceptance threshold
+# lexicon rows up to which linking and canonicalization run locally
+# (broadcast band index, driver union-find, ``LexiconIndex``); above it
+# the distributed band-join and label-propagation twins run
+LEX_GATE = 100_000
 
 
 def link_mentions(
     mentions: DataFrame,
     lexicon: DataFrame,
-    min_jaccard: float = 0.5,
-    broadcast_lex_cutoff: int = 100_000,
-    lex_rows: "list | None" = None,
+    min_jaccard: float = LINK_MIN_JACCARD,
+    broadcast_lex_cutoff: int = LEX_GATE,
 ) -> DataFrame:
     """mentions + lexicon -> mentions with (entity_id, canonical) columns.
 
@@ -436,12 +448,8 @@ def link_mentions(
     # window would otherwise re-run (scan + Exchange on alias_key) once
     # per downstream branch — three dimension-side shuffles per pipeline
     # run for a table the driver already holds. (Previously a .count()
-    # job AND a .collect() job ran serially here.) A STATIC lexicon's
-    # rows can be pre-collected once by the caller (``collect_lex_rows``)
-    # and passed in — the incremental pipeline does this per stream
-    # instead of per micro-batch (r6).
-    if lex_rows is None:
-        lex_rows = lex.limit(broadcast_lex_cutoff + 1).collect()
+    # job AND a .collect() job ran serially here.)
+    lex_rows = lex.limit(broadcast_lex_cutoff + 1).collect()
     small_lex = len(lex_rows) <= broadcast_lex_cutoff
     if small_lex:
         lex = mentions.sparkSession.createDataFrame(lex_rows, schema=lex.schema)
@@ -547,6 +555,96 @@ def entity_edges_pandas(lex_pdf: pd.DataFrame, min_jaccard: float = 0.4) -> pd.D
         }
     )
     return out[out["sim"] >= min_jaccard].reset_index(drop=True)
+
+
+class LexiconIndex(NamedTuple):
+    """Broadcastable lookup structure of a dimension-scale lexicon, built
+    locally: everything ``link_mentions`` + ``canonicalize`` derive from
+    the lexicon, precomputed once so a mention batch links AND
+    canonicalizes with numpy alone (``link``)."""
+
+    keys: np.ndarray  # lowercased aliases, deduped, sorted (object)
+    bands: list  # band_index(keys)
+    entity_id: np.ndarray  # int64 per key, component representative applied
+    canonical: np.ndarray  # object per key, representative's canonical
+
+    def link(
+        self, surface_keys: np.ndarray
+    ) -> tuple[pd.api.extensions.ExtensionArray, np.ndarray]:
+        """Lowercased surfaces -> (entity_id, canonical), null where no
+        alias matches: exact lookup by searchsorted on the sorted keys,
+        then ``fuzzy_best_arrays`` on the unique misses only."""
+        n, m = len(surface_keys), len(self.keys)
+        if not m:
+            return pd.array([pd.NA] * n, dtype="Int64"), np.full(n, None, dtype=object)
+        row = np.full(n, -1, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(self.keys, surface_keys), m - 1)
+        hit = self.keys[pos] == surface_keys
+        row[hit] = pos[hit]
+        miss = ~hit
+        if miss.any():
+            uniq, inv = np.unique(surface_keys[miss], return_inverse=True)
+            s_rows, a_rows, _ = fuzzy_best_arrays(
+                uniq, self.keys, self.bands, LINK_MIN_JACCARD
+            )
+            best = np.full(len(uniq), -1, dtype=np.int64)
+            best[s_rows] = a_rows
+            row[miss] = best[inv]
+        found = row >= 0
+        eid = pd.arrays.IntegerArray(self.entity_id[row], ~found)
+        canon = self.canonical[row]
+        canon[~found] = None
+        return eid, canon
+
+
+def canonical_reps_pandas(lex_pdf: pd.DataFrame) -> pd.DataFrame | None:
+    """entity_id -> (rep_id, rep_canonical) for every entity in a lexicon
+    similarity component: rep_id = min entity_id of the component,
+    rep_canonical = the min canonical registered under rep_id. None when
+    the lexicon has no similarity edges (canonicalization is then the
+    identity). The below-gate path of ``canonical_rep_map`` and the
+    representative folded into ``LexiconIndex``."""
+    from .components import connected_components_pandas
+
+    edges = entity_edges_pandas(lex_pdf)
+    if len(edges) == 0:
+        return None
+    comp = connected_components_pandas(edges)
+    id2canon = lex_pdf.groupby("entity_id")["canonical"].min()
+    return pd.DataFrame(
+        {
+            "entity_id": comp["node"].to_numpy(dtype=np.int64),
+            "rep_id": comp["comp"].to_numpy(dtype=np.int64),
+            "rep_canonical": id2canon.reindex(comp["comp"]).to_numpy(dtype=object),
+        }
+    )
+
+
+def lexicon_index(lexicon: DataFrame) -> LexiconIndex | None:
+    """``LexiconIndex`` built locally from ONE fetch of the lexicon,
+    or None above ``LEX_GATE`` rows (the alias graph then needs the
+    distributed linking + components path). Alias dedup as ``_dedup_lex``
+    (lowercased alias -> min (entity_id, canonical)), then each alias's
+    entity replaced by its ``canonical_reps_pandas`` representative."""
+    lex_pdf = lexicon.limit(LEX_GATE + 1).toPandas()
+    if len(lex_pdf) > LEX_GATE:
+        return None
+    lex = (
+        lex_pdf.assign(alias_key=lex_pdf["alias"].str.lower())
+        .sort_values(["alias_key", "entity_id", "canonical"], kind="stable")
+        .drop_duplicates("alias_key")
+    )
+    keys = lex["alias_key"].to_numpy(dtype=object)
+    eid = lex["entity_id"].to_numpy(dtype=np.int64).copy()
+    canon = lex["canonical"].to_numpy(dtype=object).copy()
+    reps = canonical_reps_pandas(lex_pdf)
+    if reps is not None:
+        nodes = reps["entity_id"].to_numpy()  # sorted
+        pos = np.minimum(np.searchsorted(nodes, eid), len(nodes) - 1)
+        has = nodes[pos] == eid
+        eid[has] = reps["rep_id"].to_numpy()[pos[has]]
+        canon[has] = reps["rep_canonical"].to_numpy()[pos[has]]
+    return LexiconIndex(keys, band_index(keys), eid, canon)
 
 
 def link_surfaces_pandas(

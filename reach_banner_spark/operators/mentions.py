@@ -12,6 +12,10 @@ chained UDF nodes (SURVEY.md §4.3). The parenthesis filter is a pure column
 expression (no Python at all). The exact same batch core
 (``recognize_batch``) is invoked single-process by fixtures.py to produce
 golden mentions, giving BANNER-style exact-span agreement by construction.
+
+``detect_linked_mentions`` extends the same generator through entity
+linking and canonicalization (``linking.LexiconIndex``): turn to canonical
+entity in one Arrow pass, the stage ``run_pipeline`` and ``stream_kg`` run.
 """
 
 from __future__ import annotations
@@ -225,6 +229,52 @@ def detect_mentions(
                 yield recognize_batch(pdf, model, entity_type)
 
     return narrow.mapInPandas(run, schema=schemas.MENTIONS)
+
+
+def fused_broadcast(spark, lexicon: DataFrame, model_path: str):
+    """ONE broadcast of (model bytes, ``LexiconIndex``) for
+    ``detect_linked_mentions`` — made once per pipeline call or stream —
+    or None when the lexicon is above the index gate (callers then run
+    the distributed ``link_mentions`` + ``canonicalize`` composition)."""
+    from ..caching import track_broadcast
+    from .linking import lexicon_index
+
+    index = lexicon_index(lexicon)
+    if index is None:
+        return None
+    with open(model_path, "rb") as f:
+        blob = f.read()
+    return track_broadcast(spark.sparkContext.broadcast((blob, index)))
+
+
+def detect_linked_mentions(turns: DataFrame, bc) -> DataFrame:
+    """turns -> linked, canonicalized mentions in ONE Arrow pass per batch:
+    ``recognize_batch``, the parenthesis filter, then
+    ``LexiconIndex.link`` (exact searchsorted lookup, fuzzy LSH match on
+    the batch's unique misses, representative already folded into the
+    index). Same rows as ``apply_canonical(link_mentions(detect_mentions(
+    turns).filter(paren_balanced), lexicon), canonical_rep_map(lexicon))``
+    without the mention cache, the linking joins and the fuzzy distinct
+    shuffle between them. ``bc`` comes from ``fused_broadcast``."""
+    narrow = turns.select("conv_id", "turn_idx", "text")
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        blob, index = bc.value
+        model = _load_model_bytes(blob)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            men = recognize_batch(pdf, model)
+            keep = np.fromiter(
+                (paren_balanced_py(s) for s in men["surface"]), dtype=bool, count=len(men)
+            )
+            men = men[keep]
+            if len(men):
+                keys = men["surface"].str.lower().to_numpy(dtype=object)
+                eid, canon = index.link(keys)
+                yield men.assign(entity_id=eid, canonical=canon)
+
+    return narrow.mapInPandas(run, schema=schemas.LINKED_MENTIONS)
 
 
 def paren_balanced(col: str | Column = "surface") -> Column:

@@ -1677,8 +1677,9 @@ def bpe_encode(spark, sf, rounds: int = BPE_ROUNDS):
     of the tokenizer (``bpe_train`` learns the merges; this key tokenizes
     with them and reports per-doc token economics: words, BPE tokens,
     characters). Same trainer decomposition on the apply side: merges are
-    applied ONCE PER DISTINCT WORD (vocabulary-bounded work — R
-    sequential JVM array folds, ``localCheckpoint`` between them), then
+    applied ONCE PER DISTINCT WORD (vocabulary-bounded work — the R
+    JVM array folds compose into ONE nested expression, evaluated in a
+    single pass over the vocab with no checkpoint between merges), then
     the per-word token length joins back to the corpus through a
     broadcast of the tiny (word, n_sym) map, so the only corpus-scale
     passes are the token explode and one doc_id-keyed aggregation.

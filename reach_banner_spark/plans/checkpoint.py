@@ -15,6 +15,15 @@ is lineage-truncation only, not content-addressed, so the engine adds:
   stage (fixed hashes, fixed salts, no wall-clock in data) makes the replay
   byte-stable, which the resumability pytest asserts.
 
+Durability window: a stage's table write and manifest run on a background
+thread that overlaps the NEXT stage's compute, so from the moment
+``stage()`` returns until that thread finishes (at the latest, ``flush()``,
+which ``run_pipeline_checkpointed`` calls before returning) the newest
+stage is NOT yet durable. A process killed inside that window resumes
+from the last stage whose manifest was written and recomputes the
+in-flight one; it never reads a half-written table, because the manifest
+is written last and a rebuilt stage overwrites its directory.
+
 At cluster scale the ledger would live in the Iceberg table's snapshot
 metadata; here it is a JSON sidecar per stage directory.
 """
@@ -79,26 +88,36 @@ class CheckpointedPipeline:
         return os.path.join(self.root, stage)
 
     def _join_pending(self, stage: str | None = None) -> None:
+        """Join the named stage's thread (or every in-flight one), then
+        raise the first recorded finalizer error, if any."""
         names = [stage] if stage is not None else list(self._pending)
+        errs = []
         for n in names:
             t = self._pending.pop(n, None)
             if t is not None:
                 t.join()
             err = self._pending_err.pop(n, None)
             if err is not None:
-                raise err
+                errs.append(err)
+        if errs:
+            raise errs[0]
 
-    def flush(self) -> None:
-        """Join every in-flight write/finalization and release the stage
-        caches (call before handing the checkpoint root to another
-        pipeline instance — after this, every stage is durable on
-        disk)."""
-        self._join_pending()
+    def _release_cached(self) -> None:
         while self._cached:
             try:
                 self._cached.pop().unpersist(blocking=False)
             except Exception:
                 pass
+
+    def flush(self) -> None:
+        """Join every in-flight write/finalization and release the stage
+        caches (call before handing the checkpoint root to another
+        pipeline instance — after this, every stage is durable on
+        disk). The caches are released even when a finalizer failed."""
+        try:
+            self._join_pending()
+        finally:
+            self._release_cached()
 
     def stage(
         self,
@@ -249,7 +268,11 @@ class CheckpointedPipeline:
                 )
 
     def ledger(self) -> list[dict]:
-        self._join_pending()  # ledger rows are appended by finalizers
+        try:
+            self._join_pending()  # ledger rows are appended by finalizers
+        except BaseException:
+            self._release_cached()  # a failed run releases its caches
+            raise
         if not os.path.exists(self.ledger_path):
             return []
         with open(self.ledger_path) as f:

@@ -1,9 +1,23 @@
 """The end-to-end KG-construction pipeline (SURVEY.md §3.2 L1).
 
-turns -> salted repartition (G5) -> fused mention detection (P2-P11, one
-mapInPandas) -> parenthesis filter (P12, pure expr) -> entity linking
-(G1/G2) -> canonicalization (G3) -> window triple assembly (G4)
-[-> partitioned materialize + per-partition checkpoints (G6/G7)].
+Stage shape of ``run_pipeline`` (dimension-scale lexicon, <= ``LEX_GATE``
+rows):
+
+    turns -> salted repartition (G5, explicit width)
+          -> ONE mapInPandas: CRF mentions (P2-P11) -> parenthesis filter
+             (P12) -> exact + LSH-fuzzy linking (G1/G2) -> component
+             representative (G3), against a broadcast (model, lexicon
+             index) built once per call in the application process
+          -> window triple assembly (G4)
+
+There is no cache between mentions and triples: every linking and
+canonicalization decision is a function of the mention surface and the
+static lexicon, so it folds into the mention batch instead of running as
+joins over a persisted mention table. Above the lexicon gate the alias
+graph needs the distributed operators, and the pipeline runs the
+composition ``detect_mentions -> link_mentions -> canonicalize`` over one
+mention cache. ``run_pipeline_checkpointed`` (plans/checkpoint.py) keeps
+that four-stage composition: its stage tables are the resume points.
 
 Skew note (G5): transcript corpora have hot conversations (one conv with
 1000x the median turns). The mention stage is embarrassingly parallel per
@@ -19,26 +33,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import persist_swap
 from ..operators.components import connected_components
-from ..operators.linking import entity_edges, link_mentions
-from ..operators.mentions import detect_mentions, paren_balanced
+from ..operators.linking import (
+    LEX_GATE,
+    canonical_reps_pandas,
+    entity_edges,
+    link_mentions,
+)
+from ..operators.mentions import (
+    detect_linked_mentions,
+    detect_mentions,
+    fused_broadcast,
+    paren_balanced,
+)
 from ..operators.triples import assemble_triples
 
 
-def salt_repartition(turns: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Deterministic skew-busting repartition on hash(conv_id, turn_idx).
+def salt_repartition(turns: DataFrame) -> DataFrame:
+    """Deterministic skew-busting repartition on hash(conv_id, turn_idx)
+    into ``spark.sql.shuffle.partitions`` partitions.
 
     Salt is derived from turn_idx (not rand()) so a resumed run reproduces
-    identical partitions (SURVEY.md §7 hard part #2).
+    identical partitions (SURVEY.md §7 hard part #2). The count is
+    EXPLICIT because the shuffle is byte-wise tiny (the turn text, ~1 MB
+    at bench scale): without it AQE coalesces the salt shuffle into ONE
+    partition whenever a second shuffle follows, and the CRF stage behind
+    it runs as a single task (fanout.py documents the same single-split
+    hazard for scans).
     """
+    n = int(turns.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     key = F.pmod(F.hash(F.col("conv_id"), F.col("turn_idx")), F.lit(1 << 20))
-    if num_partitions:
-        return turns.repartition(num_partitions, key)
-    return turns.repartition(key)
+    return turns.repartition(n, key)
 
 
 def canonicalize(
-    linked: DataFrame, lexicon: DataFrame, small_edge_cutoff: int = 100_000
+    linked: DataFrame, lexicon: DataFrame, small_edge_cutoff: int = LEX_GATE
 ) -> DataFrame:
     """Replace each mention's (entity_id, canonical) with its connected-
     component representative (min entity_id in the similarity component).
@@ -57,34 +87,25 @@ def canonicalize(
 
 
 def canonical_rep_map(
-    spark, lexicon: DataFrame, small_edge_cutoff: int = 100_000
+    spark, lexicon: DataFrame, small_edge_cutoff: int = LEX_GATE
 ) -> DataFrame | None:
     """The entity_id -> (rep_id, rep_canonical) mapping ``canonicalize``
-    applies — a pure function of the LEXICON, factored out (r6) so the
-    incremental pipeline can derive it ONCE per stream instead of once
-    per micro-batch (it was rebuilt per batch: a size-gate job, the
-    driver union-find, and the id2canon aggregate — all over static
-    reference data). Returns None when the lexicon has no similarity
-    edges (canonicalization is then the identity)."""
+    applies — a pure function of the LEXICON, so a caller with a static
+    lexicon can derive it once and ``apply_canonical`` it many times.
+    Returns None when the lexicon has no similarity edges
+    (canonicalization is then the identity)."""
     # ONE size-gate job: limit-toPandas both decides the path and, on the
     # driver path, already holds the rows (previously a .count() job and a
     # .toPandas() job ran serially here — driver-serial fixed cost)
     lex_pdf = lexicon.limit(small_edge_cutoff + 1).toPandas()
     if len(lex_pdf) <= small_edge_cutoff:
-        # dimension-scale lexicon: build the similarity graph + components
-        # entirely on the driver (same shared band/jaccard/union-find code
-        # as the distributed twins) — avoids ~6 tiny Spark jobs whose fixed
-        # scheduling cost would dominate and serialize the pipeline
-        from ..operators.components import connected_components_pandas
-        from ..operators.linking import entity_edges_pandas
-
-        edges_pdf = entity_edges_pandas(lex_pdf)
-        if len(edges_pdf) == 0:
-            return None
-        comp_pdf = connected_components_pandas(edges_pdf)
-        comp = spark.createDataFrame(comp_pdf)
-    else:
-        comp = connected_components(entity_edges(lexicon))
+        # dimension-scale lexicon: similarity graph, components and the
+        # representative's canonical all computed locally (same shared
+        # band/jaccard/union-find code as the distributed twins) — avoids
+        # ~6 tiny Spark jobs whose fixed scheduling cost would dominate
+        rep_pdf = canonical_reps_pandas(lex_pdf)
+        return None if rep_pdf is None else spark.createDataFrame(rep_pdf)
+    comp = connected_components(entity_edges(lexicon))
     id2canon = (
         lexicon.select("entity_id", "canonical")
         .groupBy("entity_id")
@@ -118,38 +139,21 @@ def run_pipeline(
     lexicon: DataFrame,
     model_path: str,
     window_turns: int = 2,
-    num_partitions: int | None = None,
-    persist_stages: bool = True,
 ) -> DataFrame:
-    """turns + lexicon -> triples DataFrame (no side effects).
-
-    ``persist_stages``: the mention stage feeds multiple downstream branches
-    (exact-link, fuzzy-link candidates, triples); without persistence the
-    Arrow UDF would re-run once per branch. MEMORY_AND_DISK persistence is
-    the in-session analogue of the checkpointed variant's materialization
-    (plans/checkpoint.py), which is what a resumable production run uses.
-    """
+    """turns + lexicon -> triples DataFrame (no side effects)."""
     # prune to the mention stage's columns BEFORE the salt shuffle — the
     # repartition otherwise moves role/tool/ts bytes that never get used
-    salted = salt_repartition(
-        turns.select("conv_id", "turn_idx", "text"), num_partitions
-    )
-    mentions = detect_mentions(salted, model_path)
-    mentions = mentions.filter(paren_balanced("surface"))
-    if persist_stages:
-        # persist AND materialize: the linking stage fans mentions into
-        # three branches (exact, fuzzy, candidate bands) inside one action;
-        # an unmaterialized cache would let all three recompute the Arrow
-        # UDF concurrently before the cache fills (measured 1.7x job cost).
-        # Tracked persists: materializing the linked stage below releases
-        # the mention cache (its only consumer), and the next pipeline run
-        # releases the linked cache — executor storage stays bounded across
-        # repeated invocations in one session (ADVICE r2).
-        from ..caching import persist_swap
-
-        mentions = persist_swap(mentions)
-    linked = link_mentions(mentions, lexicon)
-    linked = canonicalize(linked, lexicon)
-    if persist_stages:
-        linked = persist_swap(linked)
+    salted = salt_repartition(turns.select("conv_id", "turn_idx", "text"))
+    bc = fused_broadcast(turns.sparkSession, lexicon, model_path)
+    if bc is not None:
+        linked = detect_linked_mentions(salted, bc)
+    else:
+        # large lexicon: linking fans the mention table into three
+        # branches (exact, fuzzy, candidate bands) inside one action, so
+        # the CRF output is persisted AND materialized first — a lazy
+        # cache would let every branch recompute the Arrow UDF
+        mentions = persist_swap(
+            detect_mentions(salted, model_path).filter(paren_balanced("surface"))
+        )
+        linked = canonicalize(link_mentions(mentions, lexicon), lexicon)
     return assemble_triples(linked, turns, window_turns=window_turns)

@@ -39,6 +39,16 @@ MENTIONS = T.StructType(
     ]
 )
 
+# Linked, canonicalized mentions: the fused mention pass's output
+# (null entity_id/canonical where no lexicon alias matches).
+LINKED_MENTIONS = T.StructType(
+    MENTIONS.fields
+    + [
+        T.StructField("entity_id", T.LongType(), True),
+        T.StructField("canonical", T.StringType(), True),
+    ]
+)
+
 # Tokenized turns: token array column (banner.types.Token analogue).
 TOKENS = T.StructType(
     [

@@ -573,44 +573,27 @@ def stream_kg(spark, sf, staged_dir=None):
     only cross-batch coupling is the triple window, which the tail state
     covers. Streaming == one-shot ``run_pipeline`` is pytest-pinned.
 
-    r6 (r5-VERDICT #5): the canonicalization mapping is a pure function
-    of the STATIC lexicon, so it is derived once per stream
-    (``canonical_rep_map``, localCheckpoint'ed) and only APPLIED per
-    micro-batch — the per-batch fixed cost previously re-ran the
-    size-gate job, the driver union-find and the id2canon aggregate on
-    every batch."""
+    Everything the lexicon contributes (alias dedup, LSH band index,
+    component representatives) is built ONCE per stream and broadcast
+    with the model (``fused_broadcast``); each micro-batch is then the
+    salted fused pass (``detect_linked_mentions``) over tail+new turns,
+    one persist (the triple pairing reads it twice), and the triples."""
     from .. import schemas
     from ..fixtures import ensure_model, make_lexicon
-    from ..operators.linking import link_mentions
-    from ..operators.mentions import detect_mentions, paren_balanced
+    from ..operators.mentions import detect_linked_mentions, fused_broadcast
     from ..operators.triples import assemble_triples
-    from ..plans.pipeline import apply_canonical, canonical_rep_map
+    from ..plans.pipeline import salt_repartition
 
-    model_path = ensure_model()
     lexicon = spark.createDataFrame(make_lexicon(), schema=schemas.LEXICON)
-    rep = canonical_rep_map(spark, lexicon)
-    if rep is not None:
-        rep = rep.localCheckpoint()
-    from ..operators.linking import collect_lex_rows
-
-    lex_rows = collect_lex_rows(lexicon)
+    # the fixture lexicon is far below the index gate
+    bc = fused_broadcast(spark, lexicon, ensure_model())
 
     def per_batch(allt: DataFrame, cur: DataFrame, cleanup: list) -> DataFrame:
-        # persist the expensive stages within the batch: linking fans the
-        # mention stage into three branches and the triple pairing reads
-        # `linked` twice — without the persists the CRF Arrow core would
-        # re-execute per branch (same hazard run_pipeline documents);
-        # released via `cleanup` after the batch's output is written
-        mentions = detect_mentions(
-            allt.select("conv_id", "turn_idx", "text"), model_path
-        ).filter(paren_balanced("surface"))
-        mentions = mentions.persist()
-        mentions.count()
-        cleanup.append(lambda: mentions.unpersist(blocking=False))
-        linked = apply_canonical(
-            link_mentions(mentions, lexicon, lex_rows=lex_rows), rep
-        )
-        linked = linked.persist()
+        # salted: a micro-batch file is one parquet row group, so without
+        # the shuffle the CRF stage would run as ONE task per batch
+        linked = detect_linked_mentions(
+            salt_repartition(allt.select("conv_id", "turn_idx", "text")), bc
+        ).persist()
         linked.count()
         cleanup.append(lambda: linked.unpersist(blocking=False))
         linked_new = linked.join(

@@ -6,8 +6,9 @@ Usage:
   spark-submit --py-files rbs.zip scripts/kg_job.py \
       --input /path/turns_parquet --parallelism 8 [--output /path/out]
 
-Reads the turns table, runs the full pipeline (salted repartition -> fused
-mention detection -> linking -> canonicalization -> triple assembly), forces
+Reads the turns table, runs the full pipeline (salted repartition -> one
+fused mention detection + linking + canonicalization pass -> triple
+assembly), forces
 materialization (noop sink, or a partitioned graph-table write when --output
 is given) and prints ONE JSON line with wall-clock + turns/sec. The master
 is taken from spark-submit's --master (local[N] here; a cluster manager URL
@@ -67,12 +68,17 @@ def main() -> None:
     # slow disk they are also the dominant run-to-run noise):
     # 1. JVM + codegen warm;
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # 2. python worker pool + numpy/model imports warm (tiny mention run
-    #    through the REAL Arrow stage on every task slot);
-    from reach_banner_spark.operators.mentions import detect_mentions
+    # 2. python worker pool + numpy/model/lexicon-index imports warm (tiny
+    #    run through the REAL fused mention -> link -> canonicalize pass
+    #    that run_pipeline times, on every task slot);
+    from reach_banner_spark.operators.mentions import (
+        detect_linked_mentions,
+        fused_broadcast,
+    )
 
-    detect_mentions(
-        turns.limit(4096).repartition(args.parallelism), model_path
+    detect_linked_mentions(
+        turns.limit(4096).repartition(args.parallelism),
+        fused_broadcast(spark, lexicon, model_path),
     ).write.format("noop").mode("overwrite").save()
 
     t0 = time.time()

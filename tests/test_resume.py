@@ -107,3 +107,24 @@ def test_resume_invalidated_by_config_and_model(
         spark, turns, lexicon, model2, root, window_turns=3
     )
     assert "mentions" in cp3.stages_run, "stale mentions returned for new model"
+
+
+def test_flush_releases_caches_when_a_finalizer_fails(spark, tmp_path, monkeypatch):
+    """A failed background finalizer must surface from flush()/ledger()
+    without leaving the pipeline's stage caches in executor storage."""
+    import pytest
+
+    from reach_banner_spark.plans import checkpoint
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("finalizer failed")
+
+    monkeypatch.setattr(checkpoint.tables, "finalize_graph_manifest", boom)
+    for call in ("flush", "ledger"):
+        cp = checkpoint.CheckpointedPipeline(spark, str(tmp_path / call))
+        out = cp.stage("s", lambda: spark.range(8).withColumnRenamed("id", "conv_id"))
+        assert out.is_cached
+        with pytest.raises(RuntimeError, match="finalizer failed"):
+            getattr(cp, call)()
+        assert not out.is_cached
+        assert not cp._cached and not cp._pending
