@@ -46,9 +46,10 @@ def persist_swap(df: DataFrame) -> DataFrame:
 
 def track_broadcast(bc):
     """Track a SparkContext broadcast backing a lazily-consumed DataFrame
-    (the fuzzy-link band index) and unpersist broadcasts from *prior*
-    invocations — without this, repeated ``link_mentions`` calls in one
-    long session accumulate ~tens-of-MB broadcast blocks on every executor
+    (the ``LexiconIndex`` of ``link_mentions``, the (model, index) pair of
+    ``fused_broadcast``) and unpersist broadcasts from *prior*
+    invocations — without this, repeated linking calls in one long
+    session accumulate ~tens-of-MB broadcast blocks on every executor
     (ADVICE r3). Same lifecycle contract as ``persist_swap``: by the time a
     new invocation broadcasts, the previous invocation's consumers have
     materialized. ``unpersist`` (not ``destroy``) so a later recompute of

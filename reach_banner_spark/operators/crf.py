@@ -236,10 +236,8 @@ def viterbi2_batch(
 
 
 def decode2(model: Crf2Model, feat_idx: np.ndarray, seq_lens: np.ndarray) -> np.ndarray:
-    emit = model.emission[feat_idx].sum(axis=1) if len(feat_idx) else np.zeros(
-        (0, model.n_labels), dtype=np.float32
-    )
-    return viterbi2_batch(emit, seq_lens, model.transition2)
+    """Order-2 twin of ``decode``."""
+    return viterbi2_batch(emission_scores(model, feat_idx), seq_lens, model.transition2)
 
 
 def train_perceptron2(

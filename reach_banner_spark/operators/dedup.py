@@ -509,8 +509,8 @@ def dedup_cluster(spark, sf, small_pair_cutoff: int = 1_000_000):
     # huge pair graphs. ONE gate job: limit-toPandas decides the path and
     # already holds the rows on the driver path. The cutoff is a kwarg so
     # tests can force the distributed branch (small_pair_cutoff=0) and pin
-    # it equal to the driver union-find (same pattern as link_mentions'
-    # broadcast_lex_cutoff).
+    # it equal to the driver union-find (the KG linking operators get the
+    # same from monkeypatching ``linking.LEX_GATE``).
     # persist BEFORE the gate probe: in the above-gate case the probe has
     # already executed the whole shingle/band/verify pipeline, and without
     # a cache the distributed component loop would re-execute it all

@@ -1,27 +1,32 @@
-"""Entity linking: broadcast dictionary join + MinHash-LSH blocking (G1/G2).
+"""Entity linking: exact lexicon lookup + MinHash-LSH fuzzy match (G1/G2).
 
 Reference analogue: ``banner.tagging.dictionary.DictionaryTagger`` [P] does
 exact lexicon lookup over token n-grams; the graft spec extends this to
 fuzzy entity linking: MinHash-LSH blocking over character-3-gram shingles to
 produce candidate (mention surface, lexicon alias) pairs, verified by exact
-Jaccard, plus a broadcast exact-match join for the easy path.
+Jaccard, plus an exact alias match for the easy path.
 
 Scale design:
-- the lexicon is a small dimension table -> always ``broadcast()`` joined;
-  the big mentions side never shuffles for the exact path;
+- the lexicon is a dimension table. Up to ``LEX_GATE`` rows it is fetched
+  to the driver ONCE (``local_lexicon``) and compiled into a broadcast
+  ``LexiconIndex``: deduped, sorted alias keys, a per-band sorted LSH
+  index, and each alias's (entity_id, canonical). ``LexiconIndex.link``
+  links a batch of surfaces with numpy alone: searchsorted exact lookup,
+  then candidates -> exact Jaccard -> per-surface argmax
+  (``fuzzy_best_arrays``) on the batch's unique misses. ``link_mentions``
+  runs it as one mapInPandas over the mention table (no join, no
+  shuffle); the fused mention pass runs the same ``link`` against a copy
+  of the index with the component representatives folded in;
 - LSH banding turns the all-pairs O(N*M) similarity problem into bucket
-  lookups. Below the 100k-alias gate the WHOLE fuzzy step (candidate
-  generation via per-band sorted-array searchsorted against a broadcast
-  lexicon band index, exact-Jaccard verify, per-surface argmax) fuses into
-  one mapInPandas over distinct surfaces — the fact side pays exactly ONE
-  shuffle (the distinct). Above the gate, the distributed twin equi-joins
-  band tables on (band_idx, band_hash) — two more shuffles, the right
-  trade only when the lexicon can't be broadcast;
-- Jaccard verification is a vectorized pandas pass over candidates only;
-- ``LexiconIndex`` precomputes everything linking + canonicalization take
-  from a dimension-scale lexicon (sorted alias keys, band index,
-  representative-applied entity per alias), so the fused mention pass
-  links a batch with numpy alone — no join, no shuffle.
+  lookups. Above the gate the lexicon cannot live on the driver: the
+  exact path is a broadcast-hinted join against the Spark-deduped lexicon
+  and the distributed twin equi-joins band tables on (band_idx,
+  band_hash) (``fuzzy_best_distributed``);
+- Jaccard verification is a vectorized pass over candidates only.
+
+``LEX_GATE`` is read at call time by ``local_lexicon`` alone, so every
+operator (linking, canonicalization, the fused pass) takes the same side
+of the gate, and tests can move it.
 
 The pandas-level helpers (shingles / signatures / bands) are shared with
 fixtures.py so golden linking output is identical by construction.
@@ -256,15 +261,13 @@ def fuzzy_best_arrays(
     surfaces: np.ndarray,
     keys_arr: np.ndarray,
     bands_idx: list[tuple[np.ndarray, np.ndarray]],
-    min_jaccard: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Best fuzzy alias per lowercased surface against a ``band_index``:
     LSH candidates -> exact Jaccard -> per-surface argmax, all numpy.
     Returns (surface rows, alias rows, jaccard) for the surfaces whose
-    best candidate reaches ``min_jaccard``; ties go to the
-    lexicographically smallest alias. The shared batch core of
-    ``fuzzy_best_broadcast`` and the fused mention pass
-    (``LexiconIndex.link``)."""
+    best candidate reaches ``LINK_MIN_JACCARD``; ties go to the
+    lexicographically smallest alias. The fuzzy core of
+    ``LexiconIndex.link``, which every below-gate linking call runs."""
     n, m = len(surfaces), len(keys_arr)
     none = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
     if not n or not m:
@@ -300,65 +303,21 @@ def fuzzy_best_arrays(
         jaccard_pairs(pd.Series(surfaces[owners]), pd.Series(keys_arr[alias_idx])),
         dtype=np.float64,
     )
-    o_rows, b_rows = _segmented_argmax(owners, js, float(min_jaccard))
+    o_rows, b_rows = _segmented_argmax(owners, js, LINK_MIN_JACCARD)
     return owners[o_rows], alias_idx[b_rows], js[b_rows]
-
-
-def fuzzy_best_broadcast(
-    distinct_surfaces: DataFrame,
-    lex_keys: list[str],
-    min_jaccard: float,
-) -> DataFrame:
-    """Best fuzzy (alias, jaccard) per distinct surface — dimension-scale
-    lexicon path: the lexicon ``band_index`` is built once, locally, in
-    one vectorized pass and BROADCAST, so candidate generation + exact-Jaccard
-    verify + per-surface argmax (``fuzzy_best_arrays``) all run inside ONE
-    mapInPandas over the (already shuffled-distinct) surfaces: zero
-    additional shuffles on the fact side.
-
-    Tie-break identical to the distributed twin and to
-    ``link_surfaces_pandas``: highest jaccard, then lexicographically
-    smallest alias.
-    """
-    spark = distinct_surfaces.sparkSession
-    keys_sorted = np.array(sorted(lex_keys), dtype=object)
-    from ..caching import track_broadcast
-
-    bc = track_broadcast(
-        spark.sparkContext.broadcast((keys_sorted, band_index(keys_sorted)))
-    )
-    minj = float(min_jaccard)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_arr, bands_idx = bc.value
-        for pdf in batches:
-            surfaces = pdf["surface_key"].to_numpy()
-            s_rows, a_rows, js = fuzzy_best_arrays(surfaces, keys_arr, bands_idx, minj)
-            if len(s_rows):
-                yield pd.DataFrame(
-                    {
-                        "surface_key": surfaces[s_rows],
-                        "alias_key": keys_arr[a_rows],
-                        "jaccard": js,
-                    }
-                )
-
-    return distinct_surfaces.mapInPandas(run, _BEST_SCHEMA)
 
 
 def fuzzy_best_distributed(
     distinct_surfaces: DataFrame,
     lex: DataFrame,
-    min_jaccard: float,
 ) -> DataFrame:
-    """Large-lexicon fallback (> broadcast cutoff): band tables on both
+    """Large-lexicon fuzzy path (above ``LEX_GATE``): band tables on both
     sides, candidate equi-join on (band_idx, band_hash), then ONE groupBy
     on surface collecting the candidate alias set, with exact-Jaccard
-    verify + argmax fused in the same applyInPandas pass. Same output as
-    ``fuzzy_best_broadcast`` (tested equal). Shuffle ledger on the fact
-    side: candidate groupBy only (the old distinct + row_number window
-    spelling paid two); the right trade only when the lexicon itself is
-    too big to broadcast."""
+    verify + argmax fused in the same mapInPandas pass. Same output as
+    ``fuzzy_best_arrays`` over a ``LexiconIndex`` (tested equal). Shuffle
+    ledger on the fact side: candidate groupBy only; the right trade only
+    when the lexicon itself is too big for the driver."""
     lex_bands = surface_bands(
         lex.select(F.col("alias_key").alias("surface_key")), pre_distinct=True
     ).withColumnRenamed("surface_key", "alias_key")
@@ -368,8 +327,6 @@ def fuzzy_best_distributed(
         .groupBy("surface_key")
         .agg(F.sort_array(F.collect_set("alias_key")).alias("aliases"))
     )
-    minj = float(min_jaccard)
-
     def best(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -387,7 +344,7 @@ def fuzzy_best_distributed(
                 ),
                 dtype=np.float64,
             )
-            o_rows, b_rows = _segmented_argmax(owners, js, minj)
+            o_rows, b_rows = _segmented_argmax(owners, js, LINK_MIN_JACCARD)
             yield pd.DataFrame(
                 {
                     "surface_key": surfaces[owners[o_rows]],
@@ -419,59 +376,67 @@ def _dedup_lex(lexicon: DataFrame) -> DataFrame:
 
 
 LINK_MIN_JACCARD = 0.5  # fuzzy alias acceptance threshold
+EDGE_MIN_JACCARD = 0.4  # canonical-surface similarity of an entity edge
 # lexicon rows up to which linking and canonicalization run locally
-# (broadcast band index, driver union-find, ``LexiconIndex``); above it
-# the distributed band-join and label-propagation twins run
+# (``LexiconIndex``, driver union-find); above it the distributed
+# band-join and label-propagation twins run. Read only by
+# ``local_lexicon``, at call time.
 LEX_GATE = 100_000
 
 
-def link_mentions(
-    mentions: DataFrame,
-    lexicon: DataFrame,
-    min_jaccard: float = LINK_MIN_JACCARD,
-    broadcast_lex_cutoff: int = LEX_GATE,
-) -> DataFrame:
-    """mentions + lexicon -> mentions with (entity_id, canonical) columns.
+def local_lexicon(lexicon: DataFrame) -> pd.DataFrame | None:
+    """The lexicon as one pandas frame, fetched by ONE limit-toPandas
+    job, or None above ``LEX_GATE`` rows. The single gate every linking
+    and canonicalization operator takes its path from."""
+    gate = LEX_GATE
+    lex_pdf = lexicon.limit(gate + 1).toPandas()
+    return None if len(lex_pdf) > gate else lex_pdf
 
-    Path 1 (G2): exact broadcast join on lowercased surface == alias.
+
+def link_mentions(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
+    """mentions + lexicon -> mentions with (entity_id, canonical) columns,
+    null where no alias matches.
+
+    Path 1 (G2): exact match of the lowercased surface on an alias.
     Path 2 (G1): for unmatched surfaces, MinHash-LSH candidates against the
     lexicon bands, exact-Jaccard verify, best-match per surface (ties broken
-    by alias for determinism). Below ``broadcast_lex_cutoff`` aliases the
-    whole candidate+verify step fuses into one mapInPandas with a broadcast
-    band index (``fuzzy_best_broadcast``); above it, the distributed
-    band-join twin runs (``fuzzy_best_distributed``).
+    by alias for determinism). Up to ``LEX_GATE`` lexicon rows both paths
+    are ``LexiconIndex.link`` inside ONE mapInPandas over the mentions,
+    against a broadcast ``lexicon_index``: no join, no shuffle. Above it,
+    a broadcast-hinted exact join plus the distributed band-join twin
+    (``fuzzy_best_distributed``) run.
     """
+    lex_pdf = local_lexicon(lexicon)
+    if lex_pdf is not None:
+        from ..caching import track_broadcast
+
+        spark = mentions.sparkSession
+        bc = track_broadcast(spark.sparkContext.broadcast(lexicon_index(lex_pdf)))
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            index = bc.value
+            for pdf in batches:
+                if len(pdf):
+                    keys = pdf["surface"].str.lower().to_numpy(dtype=object)
+                    eid, canon = index.link(keys)
+                    yield pdf.assign(entity_id=eid, canonical=canon)
+
+        schema = T.StructType(
+            mentions.schema.fields
+            + [T.StructField("entity_id", T.LongType()), T.StructField("canonical", T.StringType())]
+        )
+        return mentions.mapInPandas(run, schema=schema)
+
     lex = _dedup_lex(lexicon)
-
-    # ONE size-gate job (limit-collect). Below the cutoff the collected
-    # rows REPLACE the windowed plan with a local relation: the dedup
-    # window would otherwise re-run (scan + Exchange on alias_key) once
-    # per downstream branch — three dimension-side shuffles per pipeline
-    # run for a table the driver already holds. (Previously a .count()
-    # job AND a .collect() job ran serially here.)
-    lex_rows = lex.limit(broadcast_lex_cutoff + 1).collect()
-    small_lex = len(lex_rows) <= broadcast_lex_cutoff
-    if small_lex:
-        lex = mentions.sparkSession.createDataFrame(lex_rows, schema=lex.schema)
-
     m = mentions.withColumn("surface_key", F.lower(F.col("surface")))
-
     exact = m.join(
         F.broadcast(lex), m["surface_key"] == lex["alias_key"], "left"
     ).drop("alias_key", "lex_entity_type")
-
     linked = exact.filter(F.col("entity_id").isNotNull())
     unlinked = exact.filter(F.col("entity_id").isNull()).drop(
         "entity_id", "canonical"
     )
-
-    distinct_surfaces = unlinked.select("surface_key").distinct()
-    if small_lex:
-        best = fuzzy_best_broadcast(
-            distinct_surfaces, [r["alias_key"] for r in lex_rows], min_jaccard
-        )
-    else:
-        best = fuzzy_best_distributed(distinct_surfaces, lex, min_jaccard)
+    best = fuzzy_best_distributed(unlinked.select("surface_key").distinct(), lex)
     fuzzy = (
         unlinked.join(F.broadcast(best), "surface_key", "left")
         .join(F.broadcast(lex), "alias_key", "left")
@@ -480,7 +445,7 @@ def link_mentions(
     return linked.unionByName(fuzzy).drop("surface_key")
 
 
-def entity_edges(lexicon: DataFrame, min_jaccard: float = 0.4) -> DataFrame:
+def entity_edges(lexicon: DataFrame) -> DataFrame:
     """Similarity edges between entity ids whose canonical surfaces are
     near-duplicates (LSH candidates + exact Jaccard verify) — the input to
     canonicalization via connected components (G3).
@@ -512,12 +477,12 @@ def entity_edges(lexicon: DataFrame, min_jaccard: float = 0.4) -> DataFrame:
 
     return (
         cands.withColumn("sim", jacc("ka", "kb"))
-        .filter(F.col("sim") >= F.lit(min_jaccard))
+        .filter(F.col("sim") >= F.lit(EDGE_MIN_JACCARD))
         .select("src", "dst", "sim")
     )
 
 
-def entity_edges_pandas(lex_pdf: pd.DataFrame, min_jaccard: float = 0.4) -> pd.DataFrame:
+def entity_edges_pandas(lex_pdf: pd.DataFrame) -> pd.DataFrame:
     """Single-process twin of ``entity_edges`` (same bands, same verify)."""
     ents = (
         lex_pdf.assign(surface_key=lex_pdf["canonical"].str.lower())[
@@ -554,19 +519,20 @@ def entity_edges_pandas(lex_pdf: pd.DataFrame, min_jaccard: float = 0.4) -> pd.D
             "sim": js,
         }
     )
-    return out[out["sim"] >= min_jaccard].reset_index(drop=True)
+    return out[out["sim"] >= EDGE_MIN_JACCARD].reset_index(drop=True)
 
 
 class LexiconIndex(NamedTuple):
     """Broadcastable lookup structure of a dimension-scale lexicon, built
-    locally: everything ``link_mentions`` + ``canonicalize`` derive from
-    the lexicon, precomputed once so a mention batch links AND
-    canonicalizes with numpy alone (``link``)."""
+    locally (``lexicon_index``), so a mention batch links with numpy alone
+    (``link``). ``with_reps`` gives the copy whose entities are already
+    component representatives: linking AND canonicalization in one
+    lookup, the index of the fused mention pass."""
 
     keys: np.ndarray  # lowercased aliases, deduped, sorted (object)
     bands: list  # band_index(keys)
-    entity_id: np.ndarray  # int64 per key, component representative applied
-    canonical: np.ndarray  # object per key, representative's canonical
+    entity_id: np.ndarray  # int64 per key
+    canonical: np.ndarray  # object per key
 
     def link(
         self, surface_keys: np.ndarray
@@ -584,9 +550,7 @@ class LexiconIndex(NamedTuple):
         miss = ~hit
         if miss.any():
             uniq, inv = np.unique(surface_keys[miss], return_inverse=True)
-            s_rows, a_rows, _ = fuzzy_best_arrays(
-                uniq, self.keys, self.bands, LINK_MIN_JACCARD
-            )
+            s_rows, a_rows, _ = fuzzy_best_arrays(uniq, self.keys, self.bands)
             best = np.full(len(uniq), -1, dtype=np.int64)
             best[s_rows] = a_rows
             row[miss] = best[inv]
@@ -596,6 +560,20 @@ class LexiconIndex(NamedTuple):
         canon[~found] = None
         return eid, canon
 
+    def with_reps(self, reps: pd.DataFrame | None) -> "LexiconIndex":
+        """Copy with each alias's (entity_id, canonical) replaced by its
+        ``canonical_reps_pandas`` representative; the same index when
+        ``reps`` is None (no similarity edges)."""
+        if reps is None:
+            return self
+        eid, canon = self.entity_id.copy(), self.canonical.copy()
+        nodes = reps["entity_id"].to_numpy()  # sorted
+        pos = np.minimum(np.searchsorted(nodes, eid), len(nodes) - 1)
+        has = nodes[pos] == eid
+        eid[has] = reps["rep_id"].to_numpy()[pos[has]]
+        canon[has] = reps["rep_canonical"].to_numpy()[pos[has]]
+        return self._replace(entity_id=eid, canonical=canon)
+
 
 def canonical_reps_pandas(lex_pdf: pd.DataFrame) -> pd.DataFrame | None:
     """entity_id -> (rep_id, rep_canonical) for every entity in a lexicon
@@ -603,7 +581,7 @@ def canonical_reps_pandas(lex_pdf: pd.DataFrame) -> pd.DataFrame | None:
     rep_canonical = the min canonical registered under rep_id. None when
     the lexicon has no similarity edges (canonicalization is then the
     identity). The below-gate path of ``canonical_rep_map`` and the
-    representative folded into ``LexiconIndex``."""
+    representatives of ``LexiconIndex.with_reps``."""
     from .components import connected_components_pandas
 
     edges = entity_edges_pandas(lex_pdf)
@@ -620,35 +598,26 @@ def canonical_reps_pandas(lex_pdf: pd.DataFrame) -> pd.DataFrame | None:
     )
 
 
-def lexicon_index(lexicon: DataFrame) -> LexiconIndex | None:
-    """``LexiconIndex`` built locally from ONE fetch of the lexicon,
-    or None above ``LEX_GATE`` rows (the alias graph then needs the
-    distributed linking + components path). Alias dedup as ``_dedup_lex``
-    (lowercased alias -> min (entity_id, canonical)), then each alias's
-    entity replaced by its ``canonical_reps_pandas`` representative."""
-    lex_pdf = lexicon.limit(LEX_GATE + 1).toPandas()
-    if len(lex_pdf) > LEX_GATE:
-        return None
+def lexicon_index(lex_pdf: pd.DataFrame) -> LexiconIndex:
+    """``LexiconIndex`` of a ``local_lexicon`` frame, each alias mapping to
+    its own (entity_id, canonical). Alias dedup as ``_dedup_lex``
+    (lowercased alias -> min (entity_id, canonical))."""
     lex = (
         lex_pdf.assign(alias_key=lex_pdf["alias"].str.lower())
         .sort_values(["alias_key", "entity_id", "canonical"], kind="stable")
         .drop_duplicates("alias_key")
     )
     keys = lex["alias_key"].to_numpy(dtype=object)
-    eid = lex["entity_id"].to_numpy(dtype=np.int64).copy()
-    canon = lex["canonical"].to_numpy(dtype=object).copy()
-    reps = canonical_reps_pandas(lex_pdf)
-    if reps is not None:
-        nodes = reps["entity_id"].to_numpy()  # sorted
-        pos = np.minimum(np.searchsorted(nodes, eid), len(nodes) - 1)
-        has = nodes[pos] == eid
-        eid[has] = reps["rep_id"].to_numpy()[pos[has]]
-        canon[has] = reps["rep_canonical"].to_numpy()[pos[has]]
-    return LexiconIndex(keys, band_index(keys), eid, canon)
+    return LexiconIndex(
+        keys,
+        band_index(keys),
+        lex["entity_id"].to_numpy(dtype=np.int64),
+        lex["canonical"].to_numpy(dtype=object),
+    )
 
 
 def link_surfaces_pandas(
-    surfaces: np.ndarray, lex_pdf: pd.DataFrame, min_jaccard: float = 0.5
+    surfaces: np.ndarray, lex_pdf: pd.DataFrame
 ) -> pd.DataFrame:
     """Single-process twin of ``link_mentions`` keyed by surface.
 
@@ -686,7 +655,7 @@ def link_surfaces_pandas(
             js = jaccard_pairs(
                 pd.Series([skey] * len(cand_list)), pd.Series(cand_list)
             )
-            ok = [(j, a) for j, a in zip(js, cand_list) if j >= min_jaccard]
+            ok = [(j, a) for j, a in zip(js, cand_list) if j >= LINK_MIN_JACCARD]
             if not ok:
                 continue
             # tie-break: highest jaccard, then lexicographically smallest alias

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import schemas
-from .crf import CrfModel, decode, emission_scores
+from .crf import CrfModel, emission_scores, viterbi2_batch, viterbi_batch
 from .features import featurize_flat
 from .tagformat import labels_to_spans
 from .tokenizer import tokenize_batch, tokenize_flat
@@ -106,13 +106,12 @@ def recognize_batch(
 
     feat_idx = featurize_flat(flat_toks, seq_ids)
     nonempty = seq_lens > 0
-    if hasattr(model, "transition2"):  # order-2 CRF (PSB-2008 best config)
-        from .crf import decode2
-
-        labels = decode2(model, feat_idx, seq_lens[nonempty])
-    else:
-        labels = decode(model, feat_idx, seq_lens[nonempty])
+    # one emission pass feeds both the Viterbi decode and the span margins
     emit = emission_scores(model, feat_idx)
+    if hasattr(model, "transition2"):  # order-2 CRF (PSB-2008 best config)
+        labels = viterbi2_batch(emit, seq_lens[nonempty], model.transition2)
+    else:
+        labels = viterbi_batch(emit, seq_lens[nonempty], model.transition)
 
     # --- mention assembly (P11): scheme-aware contiguous-run grouping ---
     lab = labels.astype(np.int8)
@@ -232,16 +231,18 @@ def detect_mentions(
 
 
 def fused_broadcast(spark, lexicon: DataFrame, model_path: str):
-    """ONE broadcast of (model bytes, ``LexiconIndex``) for
-    ``detect_linked_mentions`` — made once per pipeline call or stream —
-    or None when the lexicon is above the index gate (callers then run
-    the distributed ``link_mentions`` + ``canonicalize`` composition)."""
+    """ONE broadcast of (model bytes, ``LexiconIndex`` with the component
+    representatives folded in) for ``detect_linked_mentions`` — made once
+    per pipeline call or stream — or None when the lexicon is above
+    ``LEX_GATE`` (callers then run the distributed ``link_mentions`` +
+    ``canonicalize`` composition)."""
     from ..caching import track_broadcast
-    from .linking import lexicon_index
+    from .linking import canonical_reps_pandas, lexicon_index, local_lexicon
 
-    index = lexicon_index(lexicon)
-    if index is None:
+    lex_pdf = local_lexicon(lexicon)
+    if lex_pdf is None:
         return None
+    index = lexicon_index(lex_pdf).with_reps(canonical_reps_pandas(lex_pdf))
     with open(model_path, "rb") as f:
         blob = f.read()
     return track_broadcast(spark.sparkContext.broadcast((blob, index)))

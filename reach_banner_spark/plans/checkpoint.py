@@ -53,6 +53,20 @@ def file_fingerprint(path: str) -> str:
     return f"{crc & 0xFFFFFFFF:08x}"
 
 
+def frame_fingerprint(df: DataFrame) -> str:
+    """Order-insensitive content fingerprint of a (dimension-scale)
+    DataFrame, e.g. the lexicon, for lineage invalidation: row count and
+    the sum of row xxhash64s, each bounded to 2^40 so the ANSI-mode long
+    sum can never overflow (the manifest content-hash idiom)."""
+    from pyspark.sql import functions as F
+
+    rows, total = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1 << 40))),
+    ).first()
+    return f"{rows}:{(total or 0):x}"
+
+
 def _config_fingerprint(config: dict | None) -> str:
     if not config:
         return "-"
@@ -134,10 +148,11 @@ class CheckpointedPipeline:
         ``upstream`` (a prior stage name) ties this stage's validity to the
         upstream manifest's total content hash — if the upstream changed,
         the cached output is invalid and is rebuilt (lineage check).
-        ``config`` (stage parameters: model fingerprint, window_turns, …)
-        is folded into the lineage note along with CODE_VERSION, so a
-        retrained model or changed kwargs invalidates the cached stage
-        instead of silently returning stale output.
+        ``config`` (stage parameters: model or lexicon fingerprint,
+        window_turns, …) is folded into the lineage note along with
+        CODE_VERSION, so a retrained model, an edited lexicon or changed
+        kwargs invalidates the cached stage instead of silently
+        returning stale output.
 
         Cold-path shape (r6b): the stage is materialized ONCE into a
         MEMORY_AND_DISK cache; the durable parquet write AND the manifest
@@ -295,6 +310,9 @@ def run_pipeline_checkpointed(
 
     cp = CheckpointedPipeline(spark, root)
     model_fp = file_fingerprint(model_path)
+    # linking and canonicalization are functions of the lexicon too: a
+    # changed lexicon must rebuild both, not resume them
+    lex_cfg = {"lexicon": frame_fingerprint(lexicon)}
 
     mentions = cp.stage(
         "mentions",
@@ -304,10 +322,16 @@ def run_pipeline_checkpointed(
         config={"model": model_fp},
     )
     linked = cp.stage(
-        "linked", lambda: link_mentions(mentions, lexicon), upstream="mentions"
+        "linked",
+        lambda: link_mentions(mentions, lexicon),
+        upstream="mentions",
+        config=lex_cfg,
     )
     canon = cp.stage(
-        "canonical", lambda: canonicalize(linked, lexicon), upstream="linked"
+        "canonical",
+        lambda: canonicalize(linked, lexicon),
+        upstream="linked",
+        config=lex_cfg,
     )
     triples = cp.stage(
         "triples",

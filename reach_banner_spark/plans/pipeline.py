@@ -18,6 +18,10 @@ graph needs the distributed operators, and the pipeline runs the
 composition ``detect_mentions -> link_mentions -> canonicalize`` over one
 mention cache. ``run_pipeline_checkpointed`` (plans/checkpoint.py) keeps
 that four-stage composition: its stage tables are the resume points.
+Below the gate its linking is the same ``LexiconIndex.link`` the fused
+pass runs (one mapInPandas, no shuffle), and its canonicalization is the
+same ``canonical_reps_pandas``; ``linking.local_lexicon`` decides the
+side of the gate for every operator, at call time.
 
 Skew note (G5): transcript corpora have hot conversations (one conv with
 1000x the median turns). The mention stage is embarrassingly parallel per
@@ -36,10 +40,10 @@ from pyspark.sql import functions as F
 from ..caching import persist_swap
 from ..operators.components import connected_components
 from ..operators.linking import (
-    LEX_GATE,
     canonical_reps_pandas,
     entity_edges,
     link_mentions,
+    local_lexicon,
 )
 from ..operators.mentions import (
     detect_linked_mentions,
@@ -67,38 +71,30 @@ def salt_repartition(turns: DataFrame) -> DataFrame:
     return turns.repartition(n, key)
 
 
-def canonicalize(
-    linked: DataFrame, lexicon: DataFrame, small_edge_cutoff: int = LEX_GATE
-) -> DataFrame:
+def canonicalize(linked: DataFrame, lexicon: DataFrame) -> DataFrame:
     """Replace each mention's (entity_id, canonical) with its connected-
     component representative (min entity_id in the similarity component).
 
     Size-adaptive: the similarity graph lives on the *lexicon* (a dimension
-    table), so it is usually tiny relative to the fact side. Below
-    ``small_edge_cutoff`` edges we run union-find on the driver (identical
+    table), so it is usually tiny relative to the fact side. Up to
+    ``LEX_GATE`` lexicon rows we run union-find on the driver (identical
     output, zero shuffle rounds) and only go to the distributed
     min-label-propagation loop for genuinely large alias graphs — the same
     decision a planner makes between broadcast and shuffle joins.
     """
-    rep = canonical_rep_map(
-        linked.sparkSession, lexicon, small_edge_cutoff=small_edge_cutoff
-    )
-    return apply_canonical(linked, rep)
+    return apply_canonical(linked, canonical_rep_map(linked.sparkSession, lexicon))
 
 
-def canonical_rep_map(
-    spark, lexicon: DataFrame, small_edge_cutoff: int = LEX_GATE
-) -> DataFrame | None:
+def canonical_rep_map(spark, lexicon: DataFrame) -> DataFrame | None:
     """The entity_id -> (rep_id, rep_canonical) mapping ``canonicalize``
     applies — a pure function of the LEXICON, so a caller with a static
     lexicon can derive it once and ``apply_canonical`` it many times.
     Returns None when the lexicon has no similarity edges
     (canonicalization is then the identity)."""
-    # ONE size-gate job: limit-toPandas both decides the path and, on the
-    # driver path, already holds the rows (previously a .count() job and a
-    # .toPandas() job ran serially here — driver-serial fixed cost)
-    lex_pdf = lexicon.limit(small_edge_cutoff + 1).toPandas()
-    if len(lex_pdf) <= small_edge_cutoff:
+    # ONE size-gate job: the fetch both decides the path and, on the
+    # driver path, already holds the rows
+    lex_pdf = local_lexicon(lexicon)
+    if lex_pdf is not None:
         # dimension-scale lexicon: similarity graph, components and the
         # representative's canonical all computed locally (same shared
         # band/jaccard/union-find code as the distributed twins) — avoids

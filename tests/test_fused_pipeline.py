@@ -41,7 +41,14 @@ def _rows(df) -> list[tuple]:
     )
 
 
-def test_fused_pass_equals_composition(spark, small_turns, lexicon_pdf, model_path):
+def test_fused_pass_equals_composition(
+    spark, small_turns, lexicon_pdf, model_path, monkeypatch
+):
+    """Row for row against the composition on both sides of the gate.
+    Below it, ``link_mentions`` runs the same ``LexiconIndex.link`` as
+    the fused pass; with ``LEX_GATE`` at 0 the composition is the
+    independent Spark-join + distributed-components implementation."""
+    from reach_banner_spark.operators import linking
     from reach_banner_spark.operators.linking import link_mentions
     from reach_banner_spark.operators.mentions import (
         detect_linked_mentions,
@@ -56,10 +63,17 @@ def test_fused_pass_equals_composition(spark, small_turns, lexicon_pdf, model_pa
     lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
 
     mentions = detect_mentions(turns, model_path).filter(paren_balanced("surface"))
+    mentions = mentions.persist()
     raw = link_mentions(mentions, lexicon)
     want = _rows(apply_canonical(raw, canonical_rep_map(spark, lexicon)))
     got = _rows(detect_linked_mentions(turns, fused_broadcast(spark, lexicon, model_path)))
     assert got == want
+    monkeypatch.setattr(linking, "LEX_GATE", 0)
+    distributed = _rows(
+        apply_canonical(link_mentions(mentions, lexicon), canonical_rep_map(spark, lexicon))
+    )
+    mentions.unpersist()
+    assert got == distributed
 
     # the comparison covers every path of the fused pass
     surface, eid = COLS.index("surface"), COLS.index("entity_id")
@@ -109,7 +123,8 @@ def test_run_pipeline_above_index_gate_same_triples(
     spark, small_turns, lexicon_pdf, model_path, monkeypatch
 ):
     """A lexicon above the index gate (``LEX_GATE`` forced to 0) takes
-    the composition; both paths must give the same triple set."""
+    the composition with the distributed fuzzy linking and components;
+    both paths must give the same triple set."""
     from reach_banner_spark.operators import linking
     from reach_banner_spark.plans import pipeline
 
@@ -117,6 +132,21 @@ def test_run_pipeline_above_index_gate_same_triples(
     turns = spark.createDataFrame(_with_fuzzy_turns(turns_pdf), schema=schemas.TURNS)
     lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
     fused = set(pipeline.run_pipeline(turns, lexicon, model_path).collect())
+
+    calls = {"fuzzy_best_distributed": 0, "connected_components": 0}
+
+    def counted(module, name):
+        real = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+
+    counted(linking, "fuzzy_best_distributed")
+    counted(pipeline, "connected_components")
     monkeypatch.setattr(linking, "LEX_GATE", 0)
     composed = set(pipeline.run_pipeline(turns, lexicon, model_path).collect())
+    assert calls == {"fuzzy_best_distributed": 1, "connected_components": 1}, calls
     assert fused and fused == composed

@@ -260,12 +260,15 @@ def test_iceberg_facade_branches(spark, tmp_path):
     assert m["iceberg"] is False and m["total_rows"] == 2
 
 
-def test_fuzzy_link_paths_agree(spark, small_turns, lexicon_pdf, model_path):
-    """The broadcast-band-index fuzzy path (dimension-scale lexicon, fused
-    mapInPandas) and the distributed band-join fallback must produce
-    IDENTICAL linked output — the size gate is a physical-plan choice, not
-    a semantic one. Also pins both against the single-process twin."""
+def test_fuzzy_link_paths_agree(
+    spark, small_turns, lexicon_pdf, model_path, monkeypatch
+):
+    """The broadcast ``LexiconIndex`` path (dimension-scale lexicon, one
+    mapInPandas) and the distributed band-join fallback (``LEX_GATE``
+    forced to 0) must produce IDENTICAL linked output — the size gate is
+    a physical-plan choice, not a semantic one."""
     from reach_banner_spark import schemas
+    from reach_banner_spark.operators import linking
     from reach_banner_spark.operators.linking import link_mentions
     from reach_banner_spark.operators.mentions import detect_mentions, paren_balanced
 
@@ -288,9 +291,8 @@ def test_fuzzy_link_paths_agree(spark, small_turns, lexicon_pdf, model_path):
         )
 
     broadcast_path = rows(link_mentions(mentions, lexicon))
-    distributed_path = rows(
-        link_mentions(mentions, lexicon, broadcast_lex_cutoff=0)
-    )
+    monkeypatch.setattr(linking, "LEX_GATE", 0)
+    distributed_path = rows(link_mentions(mentions, lexicon))
     mentions.unpersist()
     assert broadcast_path, "no linked mentions — fixture broken"
     assert broadcast_path == distributed_path

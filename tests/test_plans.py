@@ -156,12 +156,12 @@ def test_bucketed_join_no_shuffle(spark):
 
 
 def test_link_plan_single_fact_shuffle(spark, small_turns, lexicon_pdf, model_path):
-    """The dimension-scale linking plan must contain EXACTLY ONE shuffle
-    Exchange — the distinct over unlinked surfaces. Everything else is
-    broadcast (exact join, best-match join, lexicon local relation): the
-    structural property the round-3 fusion bought, pinned so a refactor
-    can't silently reintroduce the candidate-distinct / row_number-window
-    shuffles (r2 plan) or the per-branch lexicon dedup window."""
+    """Below ``LEX_GATE`` the linking plan adds NO Exchange at all — no
+    shuffle, no broadcast exchange — and exactly one MapInPandas on top of
+    its input: exact lookup, fuzzy LSH match and alias dedup all live in
+    the broadcast ``LexiconIndex`` (``LexiconIndex.link``). Pinned so a
+    refactor can't silently reintroduce the distinct-surface shuffle, the
+    broadcast joins or the per-branch lexicon dedup window."""
     from reach_banner_spark import schemas
     from reach_banner_spark.operators.linking import link_mentions
     from reach_banner_spark.operators.mentions import detect_mentions, paren_balanced
@@ -169,22 +169,17 @@ def test_link_plan_single_fact_shuffle(spark, small_turns, lexicon_pdf, model_pa
     turns_pdf, _ = small_turns
     turns = spark.createDataFrame(turns_pdf.iloc[:200], schema=schemas.TURNS)
     lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
-    linked = link_mentions(
-        detect_mentions(turns, model_path).filter(paren_balanced("surface")),
-        lexicon,
-    )
-    plan = linked._jdf.queryExecution().executedPlan().toString()
-    shuffles = [
-        line
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line
-        or "Exchange rangepartitioning" in line
-        or "Exchange SinglePartition" in line
-    ]
-    assert len(shuffles) == 1, f"expected 1 shuffle Exchange, got:\n" + "\n".join(
-        shuffles
-    )
-    assert "surface_key" in shuffles[0]
+    mentions = detect_mentions(turns, model_path).filter(paren_balanced("surface"))
+    linked = link_mentions(mentions, lexicon)
+
+    def plan_of(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    before, after = plan_of(mentions), plan_of(linked)
+    exchanges = [line for line in after.splitlines() if "Exchange" in line]
+    assert not exchanges, "linking added an Exchange:\n" + "\n".join(exchanges)
+    assert after.count("MapInPandas") == before.count("MapInPandas") + 1, after
+    assert after.lstrip().startswith("MapInPandas"), after
 
 
 def test_funnel_plan_two_exchanges(spark):

@@ -74,9 +74,10 @@ def test_manifest_partition_stats(spark, small_turns, tmp_path):
 def test_resume_invalidated_by_config_and_model(
     spark, small_turns, lexicon_pdf, model_path, tmp_path
 ):
-    """Lineage covers stage parameters + model content: rerunning on an
-    existing checkpoint root after changing window_turns or retraining the
-    model must recompute, never return stale stage outputs."""
+    """Lineage covers stage parameters, model content and lexicon
+    content: rerunning on an existing checkpoint root after changing
+    window_turns, retraining the model or remapping an alias must
+    recompute, never return stale stage outputs."""
     import shutil
 
     from reach_banner_spark.plans.checkpoint import run_pipeline_checkpointed
@@ -107,6 +108,32 @@ def test_resume_invalidated_by_config_and_model(
         spark, turns, lexicon, model2, root, window_turns=3
     )
     assert "mentions" in cp3.stages_run, "stale mentions returned for new model"
+
+    # one alias remapped to another entity: linking and canonicalization
+    # must rebuild, the mentions stage does not depend on the lexicon
+    lex2 = lexicon_pdf.copy()
+    lex2.loc[0, "entity_id"] = int(lexicon_pdf["entity_id"].max()) + 1
+    lexicon2 = spark.createDataFrame(lex2, schema=schemas.LEXICON)
+    _t4, cp4 = run_pipeline_checkpointed(
+        spark, turns, lexicon2, model2, root, window_turns=3
+    )
+    assert "mentions" in cp4.stages_resumed
+    assert {"linked", "canonical"} <= set(cp4.stages_run), (
+        "stale linked/canonical returned for a changed lexicon"
+    )
+
+    # a new entity that only changes a component representative (no
+    # mention spells its alias): the linked table comes out the same, so
+    # only the canonical stage's own lexicon fingerprint can rebuild it
+    lex3 = pd.concat(
+        [lex2, pd.DataFrame([("qqqq", "STAT3", 1, "GENE")], columns=lex2.columns)],
+        ignore_index=True,
+    )
+    lexicon3 = spark.createDataFrame(lex3, schema=schemas.LEXICON)
+    _t5, cp5 = run_pipeline_checkpointed(
+        spark, turns, lexicon3, model2, root, window_turns=3
+    )
+    assert "canonical" in cp5.stages_run, "stale canonical for new representatives"
 
 
 def test_flush_releases_caches_when_a_finalizer_fails(spark, tmp_path, monkeypatch):
