@@ -19,9 +19,11 @@ Scale design:
   of the index with the component representatives folded in;
 - LSH banding turns the all-pairs O(N*M) similarity problem into bucket
   lookups. Above the gate the lexicon cannot live on the driver: the
-  exact path is a broadcast-hinted join against the Spark-deduped lexicon
-  and the distributed twin equi-joins band tables on (band_idx,
-  band_hash) (``fuzzy_best_distributed``);
+  exact path is a join against the Spark-deduped lexicon and the
+  distributed twin equi-joins band tables on (band_idx, band_hash)
+  (``fuzzy_best_distributed``), with no broadcast hint — a lexicon the
+  driver cannot hold is no broadcast candidate either, and the planner
+  picks the join strategy from its statistics;
 - Jaccard verification is a vectorized pass over candidates only.
 
 ``LEX_GATE`` is read at call time by ``local_lexicon`` alone, so every
@@ -323,7 +325,7 @@ def fuzzy_best_distributed(
     ).withColumnRenamed("surface_key", "alias_key")
     men_bands = surface_bands(distinct_surfaces, pre_distinct=True)
     grouped = (
-        men_bands.join(F.broadcast(lex_bands), ["band_idx", "band_hash"])
+        men_bands.join(lex_bands, ["band_idx", "band_hash"])
         .groupBy("surface_key")
         .agg(F.sort_array(F.collect_set("alias_key")).alias("aliases"))
     )
@@ -403,8 +405,8 @@ def link_mentions(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
     by alias for determinism). Up to ``LEX_GATE`` lexicon rows both paths
     are ``LexiconIndex.link`` inside ONE mapInPandas over the mentions,
     against a broadcast ``lexicon_index``: no join, no shuffle. Above it,
-    a broadcast-hinted exact join plus the distributed band-join twin
-    (``fuzzy_best_distributed``) run.
+    an exact join plus the distributed band-join twin
+    (``fuzzy_best_distributed``) run, without broadcast hints.
     """
     lex_pdf = local_lexicon(lexicon)
     if lex_pdf is not None:
@@ -429,17 +431,17 @@ def link_mentions(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
 
     lex = _dedup_lex(lexicon)
     m = mentions.withColumn("surface_key", F.lower(F.col("surface")))
-    exact = m.join(
-        F.broadcast(lex), m["surface_key"] == lex["alias_key"], "left"
-    ).drop("alias_key", "lex_entity_type")
+    exact = m.join(lex, m["surface_key"] == lex["alias_key"], "left").drop(
+        "alias_key", "lex_entity_type"
+    )
     linked = exact.filter(F.col("entity_id").isNotNull())
     unlinked = exact.filter(F.col("entity_id").isNull()).drop(
         "entity_id", "canonical"
     )
     best = fuzzy_best_distributed(unlinked.select("surface_key").distinct(), lex)
     fuzzy = (
-        unlinked.join(F.broadcast(best), "surface_key", "left")
-        .join(F.broadcast(lex), "alias_key", "left")
+        unlinked.join(best, "surface_key", "left")
+        .join(lex, "alias_key", "left")
         .drop("alias_key", "jaccard", "lex_entity_type")
     )
     return linked.unionByName(fuzzy).drop("surface_key")

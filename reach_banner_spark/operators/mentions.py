@@ -13,9 +13,11 @@ expression (no Python at all). The exact same batch core
 (``recognize_batch``) is invoked single-process by fixtures.py to produce
 golden mentions, giving BANNER-style exact-span agreement by construction.
 
-``detect_linked_mentions`` extends the same generator through entity
-linking and canonicalization (``linking.LexiconIndex``): turn to canonical
-entity in one Arrow pass, the stage ``run_pipeline`` and ``stream_kg`` run.
+``link_rows`` extends the same batch core through entity linking and
+canonicalization (``linking.LexiconIndex``): turn to canonical entity in
+one Arrow pass. The block triple pass (``triples.block_triples``), which
+``run_pipeline`` and ``stream_kg`` run below the lexicon gate, calls it
+per (conv_id, turn block) group before pairing mentions into triples.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from .. import schemas
 from .crf import CrfModel, emission_scores, viterbi2_batch, viterbi_batch
 from .features import featurize_flat
 from .tagformat import labels_to_spans
-from .tokenizer import tokenize_batch, tokenize_flat
+from .tokenizer import tokenize_flat
 
 _ABBREV_RE = re.compile(r"^ ?\(([A-Za-z0-9-]{1,10})\)")
 
@@ -75,23 +77,26 @@ def _load_model_bytes(blob: bytes) -> CrfModel:
     return m
 
 
-def recognize_batch(
-    pdf: pd.DataFrame, model: CrfModel, entity_type: str = "GENE"
+def recognize_rows(
+    texts: pd.Series, model: CrfModel, entity_type: str = "GENE"
 ) -> pd.DataFrame:
-    """Batch core: (conv_id, turn_idx, text) -> mentions rows.
+    """Batch core: turn texts -> mention rows, each keyed by ``row``, the
+    position of its turn in ``texts`` (MENTIONS columns otherwise, minus
+    conv_id and turn_idx).
 
     Pure pandas/numpy — runs identically inside the Spark worker (via
-    ``detect_mentions``) and single-process (reference recognizer).
+    ``detect_mentions`` and the block triple pass) and single-process
+    (reference recognizer). Keying by position rather than by
+    (conv_id, turn_idx) lets a batch hold one turn twice (the block pass's
+    halo copies) and map each mention back to its own row.
     """
-    texts = pdf["text"]
     flat_toks, flat_starts, flat_ends, seq_ids, seq_lens = tokenize_flat(
         texts, fine=True
     )
     n = len(flat_toks)
     empty = pd.DataFrame(
         {
-            "conv_id": pd.Series([], dtype="string"),
-            "turn_idx": pd.Series([], dtype="int32"),
+            "row": pd.Series([], dtype="int64"),
             "begin_tok": pd.Series([], dtype="int32"),
             "end_tok": pd.Series([], dtype="int32"),
             "begin_char": pd.Series([], dtype="int32"),
@@ -148,12 +153,9 @@ def recognize_batch(
     else:
         score = np.empty(0, dtype=np.float64)
 
-    conv = pdf["conv_id"].to_numpy()
-    tidx = pdf["turn_idx"].to_numpy()
     texts_np = texts.to_numpy()
     rows = {
-        "conv_id": conv[sent_of],
-        "turn_idx": tidx[sent_of].astype(np.int32),
+        "row": sent_of.astype(np.int64),
         "begin_tok": begin_tok,
         "end_tok": end_tok,
         "begin_char": begin_char,
@@ -176,29 +178,15 @@ def recognize_batch(
         if m:
             b2 = e + m.start(1)
             e2 = e + m.end(1)
-            extra.append(
-                (
-                    conv[si],
-                    int(tidx[si]),
-                    -1,
-                    -1,
-                    b2,
-                    e2,
-                    entity_type,
-                    text[b2:e2],
-                    0.0,
-                )
-            )
+            extra.append((int(si), -1, -1, b2, e2, entity_type, text[b2:e2], 0.0))
     if extra:
         out = pd.concat(
             [out, pd.DataFrame(extra, columns=list(rows.keys()))], ignore_index=True
         )
-        out = out.drop_duplicates(
-            subset=["conv_id", "turn_idx", "begin_char", "end_char"]
-        )
+        out = out.drop_duplicates(subset=["row", "begin_char", "end_char"])
     return out.astype(
         {
-            "turn_idx": "int32",
+            "row": "int64",
             "begin_tok": "int32",
             "end_tok": "int32",
             "begin_char": "int32",
@@ -206,6 +194,18 @@ def recognize_batch(
             "score": "float64",
         }
     )
+
+
+def recognize_batch(
+    pdf: pd.DataFrame, model: CrfModel, entity_type: str = "GENE"
+) -> pd.DataFrame:
+    """(conv_id, turn_idx, text) -> MENTIONS rows: ``recognize_rows`` with
+    each mention's turn key gathered from its row."""
+    out = recognize_rows(pdf["text"], model, entity_type)
+    row = out.pop("row").to_numpy()
+    out.insert(0, "conv_id", pdf["conv_id"].to_numpy()[row])
+    out.insert(1, "turn_idx", pdf["turn_idx"].to_numpy()[row].astype(np.int32))
+    return out
 
 
 def detect_mentions(
@@ -232,7 +232,7 @@ def detect_mentions(
 
 def fused_broadcast(spark, lexicon: DataFrame, model_path: str):
     """ONE broadcast of (model bytes, ``LexiconIndex`` with the component
-    representatives folded in) for ``detect_linked_mentions`` — made once
+    representatives folded in) for ``triples.block_triples`` — made once
     per pipeline call or stream — or None when the lexicon is above
     ``LEX_GATE`` (callers then run the distributed ``link_mentions`` +
     ``canonicalize`` composition)."""
@@ -248,34 +248,23 @@ def fused_broadcast(spark, lexicon: DataFrame, model_path: str):
     return track_broadcast(spark.sparkContext.broadcast((blob, index)))
 
 
-def detect_linked_mentions(turns: DataFrame, bc) -> DataFrame:
-    """turns -> linked, canonicalized mentions in ONE Arrow pass per batch:
-    ``recognize_batch``, the parenthesis filter, then
-    ``LexiconIndex.link`` (exact searchsorted lookup, fuzzy LSH match on
-    the batch's unique misses, representative already folded into the
-    index). Same rows as ``apply_canonical(link_mentions(detect_mentions(
-    turns).filter(paren_balanced), lexicon), canonical_rep_map(lexicon))``
-    without the mention cache, the linking joins and the fuzzy distinct
-    shuffle between them. ``bc`` comes from ``fused_broadcast``."""
-    narrow = turns.select("conv_id", "turn_idx", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        blob, index = bc.value
-        model = _load_model_bytes(blob)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            men = recognize_batch(pdf, model)
-            keep = np.fromiter(
-                (paren_balanced_py(s) for s in men["surface"]), dtype=bool, count=len(men)
-            )
-            men = men[keep]
-            if len(men):
-                keys = men["surface"].str.lower().to_numpy(dtype=object)
-                eid, canon = index.link(keys)
-                yield men.assign(entity_id=eid, canonical=canon)
-
-    return narrow.mapInPandas(run, schema=schemas.LINKED_MENTIONS)
+def link_rows(texts: pd.Series, model: CrfModel, index) -> pd.DataFrame:
+    """The fused per-batch core, turn texts to canonical entities:
+    ``recognize_rows``, the parenthesis filter, then ``LexiconIndex.link``
+    (exact searchsorted lookup, fuzzy LSH match on the batch's unique
+    misses, representative already folded into the index by
+    ``fused_broadcast``). Rows keyed by ``row`` as in ``recognize_rows``,
+    plus (entity_id, canonical), null where no alias matches. Per turn the
+    same mentions as ``apply_canonical(link_mentions(detect_mentions(turns)
+    .filter(paren_balanced), lexicon), canonical_rep_map(lexicon))``
+    without the mention cache and joins between those operators."""
+    men = recognize_rows(texts, model)
+    keep = np.fromiter(
+        (paren_balanced_py(s) for s in men["surface"]), dtype=bool, count=len(men)
+    )
+    men = men[keep]
+    eid, canon = index.link(men["surface"].str.lower().to_numpy(dtype=object))
+    return men.assign(entity_id=eid, canonical=canon)
 
 
 def paren_balanced(col: str | Column = "surface") -> Column:
@@ -298,29 +287,3 @@ def paren_balanced_py(s: str) -> bool:
         and s.count("[") == s.count("]")
         and s.count("{") == s.count("}")
     )
-
-
-def tokenize_turns(turns: DataFrame, fine: bool = True) -> DataFrame:
-    """Standalone tokenizer stage (P2/P3) -> TOKENS schema DataFrame."""
-    narrow = turns.select("conv_id", "turn_idx", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            toks, starts, ends = tokenize_batch(pdf["text"], fine=fine)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "tokens": [
-                        [
-                            {"tok": t, "start": int(s), "end": int(e)}
-                            for t, s, e in zip(ts, ss.tolist(), es.tolist())
-                        ]
-                        for ts, ss, es in zip(toks, starts, ends)
-                    ],
-                }
-            )
-
-    return narrow.mapInPandas(run, schema=schemas.TOKENS)

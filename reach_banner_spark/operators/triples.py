@@ -4,8 +4,7 @@ No BANNER counterpart — this stage comes from the graft spec
 [V BASELINE.json:6]: linked mentions are paired within a sliding window of
 ``window_turns`` turns inside each conversation, ordered by (turn_idx,
 begin_char), and the predicate is chosen by a role/tool-aware rule table
-over the *object* turn (pure ``when()`` expression chain — stays entirely
-inside whole-stage codegen, no Python).
+over the *object* turn.
 
 Rule table (deterministic, shared verbatim by the pandas golden twin):
 
@@ -16,17 +15,43 @@ Rule table (deterministic, shared verbatim by the pandas golden twin):
   obj turn role=tool                -> observed_with
   otherwise                         -> followed_by
 
-Scale: the self-join shuffles once on conv_id (both sides co-partitioned);
-conversation skew is handled upstream by salted repartition (G5) and AQE
-skew-join splitting. Output is ``distinct()`` so the triple set is stable.
+Two implementations:
+
+- ``block_triples`` — turn to triple in ONE mapInPandas, what
+  ``run_pipeline`` and ``stream_kg`` run below the lexicon gate. One
+  exchange on (conv_id, turn block): each turn lands in its own block of
+  ``BLOCK`` turns and, as a halo, in the earlier blocks whose subject
+  turns can reach it. Per block, ``mentions.link_rows`` recognizes and
+  links, then ``pair_mentions`` pairs with role and tool already on the
+  row, keeping only triples whose subject turn the block owns — so no
+  triple comes from two blocks and no distinct runs across partitions.
+  Blocks split a hot conversation across tasks.
+- ``assemble_triples`` — a Spark self-join over a linked-mention table
+  (pure ``when()`` predicate, whole-stage codegen, no Python), for the
+  callers that hold such a table: the above-gate ``run_pipeline`` and
+  ``stream_kg``, ``run_pipeline_checkpointed``'s ``triples`` stage, the
+  dictionary-mention streams (``stream_triples``, ``stream_growth``) and
+  the benchmark's layer replay. It shuffles once on (conv_id, turn_idx)
+  and deduplicates with ``distinct()``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import schemas
+
+# turns per block of ``block_triples``: small enough to split a hot
+# conversation over the tasks and bound the rows carried across Arrow
+# batches, large enough that the halo (window_turns extra turns per
+# block) stays a small share of the CRF work. Output does not depend on it.
+BLOCK = 64
 
 
 def _pred_tail_expr(role_col, tool_col):
@@ -172,6 +197,155 @@ def assemble_triples(
             "obj",
         )
     )
+
+
+def _pred_tail_np(role: pd.Series, tool: pd.Series) -> np.ndarray:
+    """numpy twin of ``_pred_tail_expr`` over object-turn (role, tool)."""
+    is_role = {
+        r: role.eq(r).to_numpy(dtype=bool, na_value=False)
+        for r in ("assistant", "user", "tool")
+    }
+    has_tool = (tool.notna() & tool.ne("")).to_numpy(dtype=bool, na_value=False)
+    out = np.full(len(role), "followed_by", dtype=object)
+    out[is_role["tool"]] = "observed_with"
+    out[is_role["user"]] = "asked_about"
+    out[is_role["assistant"]] = "answered_with"
+    derived = is_role["assistant"] & has_tool
+    out[derived] = ("derived_via_" + tool[derived]).to_numpy(dtype=object)
+    return out
+
+
+def pair_mentions(men: pd.DataFrame, window_turns: int) -> pd.DataFrame:
+    """Vectorized window pairing over the linked mentions of whole
+    (conv_id, blk) groups -> distinct TRIPLES rows.
+
+    Columns: conv_id, blk, turn_idx, begin_char, canonical (null rows are
+    dropped), role and tool of the mention's turn, ``own`` (the mention's
+    turn is owned by its block, so it may be a subject) and, optionally,
+    ``new`` (only such mentions may be objects: the stream's new turns).
+    A subject pairs with the mentions of its group at turns t1 ..
+    t1 + window_turns that come after it in (turn_idx, begin_char) order
+    and name another entity; same semantics as ``assemble_triples``."""
+    men = men[men["canonical"].notna()]
+    if not len(men):
+        return pd.DataFrame({f.name: pd.Series([], dtype=object) for f in schemas.TRIPLES})
+    g = men.groupby(["conv_id", "blk"], sort=False).ngroup().to_numpy(dtype=np.int64)
+    t = men["turn_idx"].to_numpy(dtype=np.int64)
+    c = men["begin_char"].to_numpy(dtype=np.int64)
+    order = np.lexsort((c, t, g))
+    g, t, c = g[order], t[order], c[order]
+    canon = men["canonical"].to_numpy(dtype=object)[order]
+    # (group, turn) as one sorted int64 key: the window of row i ends
+    # where the key passes key[i] + window_turns, within its own group
+    t0 = t.min()
+    key = g * (t.max() - t0 + window_turns + 1) + (t - t0)
+    hi = np.searchsorted(key, key + window_turns, side="right")
+    subj = np.flatnonzero(men["own"].to_numpy(dtype=bool)[order])
+    cnt = hi[subj] - subj - 1
+    ii = np.repeat(subj, cnt)
+    jj = ii + 1 + np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    keep = ((t[jj] > t[ii]) | (c[jj] > c[ii])) & (canon[ii] != canon[jj])
+    if "new" in men:
+        keep &= men["new"].to_numpy(dtype=bool)[order][jj]
+    ii, jj = ii[keep], jj[keep]
+    obj = men.iloc[order[jj]].reset_index(drop=True)
+    tail = _pred_tail_np(obj["role"], obj["tool"])
+    return pd.DataFrame(
+        {
+            "conv_id": men["conv_id"].to_numpy(dtype=object)[order][ii],
+            "window_start": t[ii].astype(np.int32),
+            "subj": canon[ii],
+            "pred": np.where(t[ii] == t[jj], "co_mentioned", tail),
+            "obj": canon[jj],
+        }
+    ).drop_duplicates(ignore_index=True)
+
+
+def whole_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Re-cut batches sorted by (conv_id, blk) at group edges: yields
+    chunks of whole groups and carries only the last, possibly incomplete
+    group into the next batch (never a whole partition)."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if not len(pdf):
+            continue
+        conv, blk = pdf["conv_id"].to_numpy(), pdf["blk"].to_numpy()
+        last = (conv == conv[-1]) & (blk == blk[-1])
+        if last.all():
+            carry = pdf
+            continue
+        cut = len(pdf) - int(np.argmin(last[::-1]))
+        yield pdf.iloc[:cut]
+        carry = pdf.iloc[cut:]
+    if carry is not None:
+        yield carry
+
+
+def block_triples(
+    turns: DataFrame, bc, window_turns: int = 2, new_col: str | None = None
+) -> DataFrame:
+    """turns -> TRIPLES in ONE mapInPandas behind ONE exchange.
+
+    Turn t goes to blocks floor((t - window_turns) / BLOCK) ..
+    floor(t / BLOCK) (its own block last): every block then holds each
+    turn its subjects can pair with, for any ``window_turns``. The
+    exchange is ``repartition(n, conv_id, blk)`` at the explicit
+    ``spark.sql.shuffle.partitions`` width (AQE may not fold it into one
+    task), sorted within partitions so that ``whole_groups`` can cut the
+    Arrow batches at group edges. Per chunk of whole groups,
+    ``mentions.link_rows`` runs once per input row (halo copies included)
+    and ``pair_mentions`` keeps the triples whose subject turn the block
+    owns. ``new_col`` names a boolean column: only mentions of rows with
+    it set become objects (the stream's new turns; subjects may come from
+    the tail). ``bc`` comes from ``mentions.fused_broadcast``. Assumes
+    (conv_id, turn_idx) is a key of ``turns``, as ``assemble_triples``'s
+    role join does."""
+    from .mentions import _load_model_bytes, link_rows
+
+    n = int(turns.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    t = F.col("turn_idx")
+    home = F.floor(t / F.lit(BLOCK))
+    first = F.floor((t - F.lit(window_turns)) / F.lit(BLOCK))
+    tag = [F.col(new_col).alias("new")] if new_col else []
+    blocks = (
+        turns.select(
+            "conv_id",
+            "turn_idx",
+            "text",
+            "role",
+            "tool",
+            *tag,
+            F.explode(F.sequence(first, home)).alias("blk"),
+        )
+        .withColumn("own", F.col("blk") == home)
+        .repartition(n, "conv_id", "blk")
+        .sortWithinPartitions("conv_id", "blk")
+    )
+    meta = ["conv_id", "blk", "turn_idx", "role", "tool", "own"] + (["new"] if new_col else [])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        blob, index = bc.value
+        model = _load_model_bytes(blob)
+        for rows in whole_groups(batches):
+            men = link_rows(rows["text"], model, index)
+            row = men["row"].to_numpy()
+            out = pair_mentions(
+                pd.DataFrame(
+                    {c: rows[c].to_numpy()[row] for c in meta}
+                    | {
+                        "begin_char": men["begin_char"].to_numpy(),
+                        "canonical": men["canonical"].to_numpy(dtype=object),
+                    }
+                ),
+                window_turns,
+            )
+            if len(out):
+                yield out
+
+    return blocks.mapInPandas(run, schema=schemas.TRIPLES)
 
 
 def assemble_triples_pandas(

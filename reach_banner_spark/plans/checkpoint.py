@@ -140,7 +140,6 @@ class CheckpointedPipeline:
         bucket_col: str | None = None,
         upstream: str | None = None,
         config: dict | None = None,
-        durable_read: bool = False,
         handoff: bool = False,
     ) -> DataFrame:
         """Return the stage output, recomputing only when not checkpointed.
@@ -168,9 +167,7 @@ class CheckpointedPipeline:
         by the next operator invocation's persist_swap, the documented
         lifecycle) instead of the pipeline's flush-released list, so the
         caller consumes the cache after ``flush()`` without a parquet
-        round-trip; ``durable_read=True`` instead keeps the synchronous
-        write + table read-back for callers that need a parquet-backed
-        DataFrame outliving every cache. At 100 TB the caches spill to
+        round-trip. At 100 TB the caches spill to
         local disk (MEMORY_AND_DISK) — still cheaper than the
         remote-table round-trip the old path paid per stage.
         """
@@ -189,35 +186,6 @@ class CheckpointedPipeline:
         if bucket not in df.columns:
             bucket = df.columns[0]
         self.stages_run.append(name)
-        if durable_read:
-            # heavy data write on the main thread — it still overlaps the
-            # UPSTREAM stage's in-flight write/finalize; the lineage note
-            # derivation below joins that thread
-            schema_json = tables.write_graph_data(df, path, bucket_col=bucket)
-            want_lineage = self._lineage_of(upstream, config)
-            columns = list(df.columns)
-
-            def _finalize() -> None:
-                try:
-                    m = tables.finalize_graph_manifest(
-                        self.spark, path, schema_json, columns,
-                        bucket_col=bucket, snapshot_note=want_lineage,
-                    )
-                    self._append_ledger(name, m)
-                except BaseException as e:  # re-raised at the next join
-                    self._pending_err[name] = e
-
-            t = threading.Thread(target=_finalize, name=f"rbs-ckpt-{name}")
-            t.start()
-            self._pending[name] = t
-            try:
-                return tables.read_graph_table(self.spark, path)
-            except Exception:
-                # empty-table case: the read needs the manifest's stored
-                # schema — wait for the finalizer and retry
-                self._join_pending(name)
-                return tables.read_graph_table(self.spark, path)
-
         cached = df.persist()
         cached.count()  # materialize while the upstream write is in flight
         if handoff:

@@ -1,35 +1,39 @@
 """The end-to-end KG-construction pipeline (SURVEY.md §3.2 L1).
 
 Stage shape of ``run_pipeline`` (dimension-scale lexicon, <= ``LEX_GATE``
-rows):
+rows) — ``triples.block_triples``:
 
-    turns -> salted repartition (G5, explicit width)
-          -> ONE mapInPandas: CRF mentions (P2-P11) -> parenthesis filter
-             (P12) -> exact + LSH-fuzzy linking (G1/G2) -> component
-             representative (G3), against a broadcast (model, lexicon
-             index) built once per call in the application process
-          -> window triple assembly (G4)
+    turns -> ONE exchange: repartition(n, conv_id, turn block) at explicit
+             width, each turn also copied into the earlier block whose
+             subjects can reach it (halo), sorted within partitions
+          -> ONE mapInPandas per (conv_id, block) group: CRF mentions
+             (P2-P11) -> parenthesis filter (P12) -> exact + LSH-fuzzy
+             linking (G1/G2) -> component representative (G3), against a
+             broadcast (model, lexicon index) built once per call in the
+             application process -> vectorized window pairing (G4) with
+             role and tool already on the row; each block emits only the
+             triples whose subject turn it owns
 
-There is no cache between mentions and triples: every linking and
-canonicalization decision is a function of the mention surface and the
-static lexicon, so it folds into the mention batch instead of running as
-joins over a persisted mention table. Above the lexicon gate the alias
-graph needs the distributed operators, and the pipeline runs the
-composition ``detect_mentions -> link_mentions -> canonicalize`` over one
-mention cache. ``run_pipeline_checkpointed`` (plans/checkpoint.py) keeps
-that four-stage composition: its stage tables are the resume points.
-Below the gate its linking is the same ``LexiconIndex.link`` the fused
-pass runs (one mapInPandas, no shuffle), and its canonicalization is the
-same ``canonical_reps_pandas``; ``linking.local_lexicon`` decides the
-side of the gate for every operator, at call time.
+There is no cache, join or distinct between turns and triples: every
+linking and canonicalization decision is a function of the mention
+surface and the static lexicon, so it folds into the mention batch, and
+the halo puts every turn a subject can pair with into the subject's
+block. Above the lexicon gate the alias graph needs the distributed
+operators, and the pipeline runs the composition ``detect_mentions ->
+link_mentions -> canonicalize`` over one mention cache, then
+``assemble_triples``. ``run_pipeline_checkpointed`` (plans/checkpoint.py)
+keeps that four-stage composition: its stage tables are the resume
+points. Below the gate its linking is the same ``LexiconIndex.link`` the
+block pass runs (one mapInPandas, no shuffle), and its canonicalization
+is the same ``canonical_reps_pandas``; ``linking.local_lexicon`` decides
+the side of the gate for every operator, at call time.
 
 Skew note (G5): transcript corpora have hot conversations (one conv with
-1000x the median turns). The mention stage is embarrassingly parallel per
-TURN, not per conversation, so we repartition on a deterministic composite
-key hash(conv_id, turn_idx) — this splits hot conversations across
-partitions with zero correctness impact (mentions are per-turn). The later
-triple self-join groups by conv_id again; AQE skew-join splitting plus the
-distinct() pre-aggregation keep that stage balanced.
+1000x the median turns). The block key (conv_id, turn_idx // BLOCK)
+splits a hot conversation into blocks of ``BLOCK`` turns spread over the
+partitions, so the CRF, the dominant cost, is balanced per block, and the
+pairing never leaves the block. The above-gate composition instead salts
+the mention stage on hash(conv_id, turn_idx) (``salt_repartition``).
 """
 
 from __future__ import annotations
@@ -45,13 +49,8 @@ from ..operators.linking import (
     link_mentions,
     local_lexicon,
 )
-from ..operators.mentions import (
-    detect_linked_mentions,
-    detect_mentions,
-    fused_broadcast,
-    paren_balanced,
-)
-from ..operators.triples import assemble_triples
+from ..operators.mentions import detect_mentions, fused_broadcast, paren_balanced
+from ..operators.triples import assemble_triples, block_triples
 
 
 def salt_repartition(turns: DataFrame) -> DataFrame:
@@ -137,19 +136,17 @@ def run_pipeline(
     window_turns: int = 2,
 ) -> DataFrame:
     """turns + lexicon -> triples DataFrame (no side effects)."""
-    # prune to the mention stage's columns BEFORE the salt shuffle — the
-    # repartition otherwise moves role/tool/ts bytes that never get used
-    salted = salt_repartition(turns.select("conv_id", "turn_idx", "text"))
     bc = fused_broadcast(turns.sparkSession, lexicon, model_path)
     if bc is not None:
-        linked = detect_linked_mentions(salted, bc)
-    else:
-        # large lexicon: linking fans the mention table into three
-        # branches (exact, fuzzy, candidate bands) inside one action, so
-        # the CRF output is persisted AND materialized first — a lazy
-        # cache would let every branch recompute the Arrow UDF
-        mentions = persist_swap(
-            detect_mentions(salted, model_path).filter(paren_balanced("surface"))
-        )
-        linked = canonicalize(link_mentions(mentions, lexicon), lexicon)
+        return block_triples(turns, bc, window_turns=window_turns)
+    # large lexicon: linking fans the mention table into three branches
+    # (exact, fuzzy, candidate bands) inside one action, so the CRF output
+    # is persisted AND materialized first — a lazy cache would let every
+    # branch recompute the Arrow UDF. Pruned before the salt shuffle,
+    # which would otherwise move role/tool/ts bytes the CRF never reads.
+    salted = salt_repartition(turns.select("conv_id", "turn_idx", "text"))
+    mentions = persist_swap(
+        detect_mentions(salted, model_path).filter(paren_balanced("surface"))
+    )
+    linked = canonicalize(link_mentions(mentions, lexicon), lexicon)
     return assemble_triples(linked, turns, window_turns=window_turns)

@@ -49,27 +49,6 @@ LINKED_MENTIONS = T.StructType(
     ]
 )
 
-# Tokenized turns: token array column (banner.types.Token analogue).
-TOKENS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField(
-            "tokens",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("tok", T.StringType(), False),
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
 # Entity dictionary / lexicon (banner.tagging.dictionary.DictionaryTagger's
 # term -> type map, extended with canonical ids for linking).
 LEXICON = T.StructType(

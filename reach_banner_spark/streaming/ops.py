@@ -398,9 +398,10 @@ def _run_incremental_turns(
     turn corpus with bounded per-conversation tail state (the last
     ``window_turns`` turns, parquet-swapped per batch, superseded
     snapshots removed). ``per_batch(allt, cur, cleanup)`` returns the
-    rows to append for this batch — ``allt`` is tail+new turns, ``cur``
-    the new turns only; callables appended to ``cleanup`` run after the
-    batch's output is durably written (persist releases)."""
+    rows to append for this batch — ``allt`` is tail+new turns with a
+    boolean ``new`` column (False on tail rows), ``cur`` the new turns
+    only; callables appended to ``cleanup`` run after the batch's output
+    is durably written (persist releases)."""
     import shutil
 
     from pyspark.sql.window import Window
@@ -415,11 +416,10 @@ def _run_incremental_turns(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         cur = batch_df.select("conv_id", "turn_idx", "role", "text", "tool")
-        allt = (
-            cur
-            if state["tail"] is None
-            else sp.read.parquet(state["tail"]).unionByName(cur)
-        )
+        allt = cur.withColumn("new", F.lit(True))
+        if state["tail"] is not None:
+            tail_rows = sp.read.parquet(state["tail"]).withColumn("new", F.lit(False))
+            allt = tail_rows.unionByName(allt)
         cleanup: list = []
         try:
             # coalesce the tiny per-batch outputs (r6): a 32-partition
@@ -433,7 +433,7 @@ def _run_incremental_turns(
             tail = (
                 allt.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") <= window_turns)
-                .drop("rn")
+                .drop("rn", "new")
             )
             new_tail = os.path.join(work, f"tail_b{batch_id}")
             tail.coalesce(4).write.mode("overwrite").parquet(new_tail)
@@ -576,38 +576,65 @@ def stream_kg(spark, sf, staged_dir=None):
     Everything the lexicon contributes (alias dedup, LSH band index,
     component representatives) is built ONCE per stream and broadcast
     with the model (``fused_broadcast``); each micro-batch is then the
-    salted fused pass (``detect_linked_mentions``) over tail+new turns,
-    one persist (the triple pairing reads it twice), and the triples."""
+    block triple pass (``triples.block_triples``) over tail+new turns,
+    which keeps only the pairs whose object turn is new: one exchange,
+    one mapInPandas, no persist and no join. Above the lexicon gate the
+    representative map is built once per stream instead, and each batch
+    runs the composition (``detect_mentions`` -> ``link_mentions`` ->
+    ``apply_canonical``) over one mention persist, then
+    ``assemble_triples`` with the new turns' mentions as objects."""
     from .. import schemas
     from ..fixtures import ensure_model, make_lexicon
-    from ..operators.mentions import detect_linked_mentions, fused_broadcast
-    from ..operators.triples import assemble_triples
-    from ..plans.pipeline import salt_repartition
+    from ..operators.mentions import fused_broadcast
+    from ..operators.triples import block_triples
 
     lexicon = spark.createDataFrame(make_lexicon(), schema=schemas.LEXICON)
-    # the fixture lexicon is far below the index gate
-    bc = fused_broadcast(spark, lexicon, ensure_model())
+    model_path = ensure_model()
+    bc = fused_broadcast(spark, lexicon, model_path)
+    if bc is not None:
+
+        def per_batch(allt: DataFrame, cur: DataFrame, cleanup: list) -> DataFrame:
+            return block_triples(allt, bc, window_turns=2, new_col="new")
+
+    else:
+        per_batch = _composed_kg_per_batch(spark, lexicon, model_path)
+    return _run_incremental_turns(
+        spark, "stream_kg", per_batch, staged_dir=staged_dir
+    )
+
+
+def _composed_kg_per_batch(spark, lexicon: DataFrame, model_path: str):
+    """``stream_kg``'s per-batch function above the lexicon gate: the
+    ``run_pipeline`` composition over tail+new turns, with the component
+    representative map materialized once per stream."""
+    from ..operators.linking import link_mentions
+    from ..operators.mentions import detect_mentions, paren_balanced
+    from ..operators.triples import assemble_triples
+    from ..plans.pipeline import apply_canonical, canonical_rep_map, salt_repartition
+
+    rep = canonical_rep_map(spark, lexicon)
+    if rep is not None:
+        rep = rep.localCheckpoint()
 
     def per_batch(allt: DataFrame, cur: DataFrame, cleanup: list) -> DataFrame:
         # salted: a micro-batch file is one parquet row group, so without
-        # the shuffle the CRF stage would run as ONE task per batch
-        linked = detect_linked_mentions(
-            salt_repartition(allt.select("conv_id", "turn_idx", "text")), bc
-        ).persist()
-        linked.count()
-        cleanup.append(lambda: linked.unpersist(blocking=False))
+        # the shuffle the CRF stage would run as ONE task per batch; the
+        # materialized persist keeps linking's branches (exact, fuzzy,
+        # candidate bands) from each recomputing the CRF
+        mentions = detect_mentions(
+            salt_repartition(allt.select("conv_id", "turn_idx", "text")), model_path
+        ).filter(paren_balanced("surface")).persist()
+        mentions.count()
+        cleanup.append(lambda: mentions.unpersist(blocking=False))
+        linked = apply_canonical(link_mentions(mentions, lexicon), rep)
         linked_new = linked.join(
             cur.select("conv_id", "turn_idx").distinct(),
             ["conv_id", "turn_idx"],
             "left_semi",
         )
-        return assemble_triples(
-            linked, allt, window_turns=2, obj_mentions=linked_new
-        )
+        return assemble_triples(linked, allt, window_turns=2, obj_mentions=linked_new)
 
-    return _run_incremental_turns(
-        spark, "stream_kg", per_batch, staged_dir=staged_dir
-    )
+    return per_batch
 
 
 # _source_fingerprint moved to tmputil in r5 (shared with the

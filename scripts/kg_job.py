@@ -6,10 +6,9 @@ Usage:
   spark-submit --py-files rbs.zip scripts/kg_job.py \
       --input /path/turns_parquet --parallelism 8 [--output /path/out]
 
-Reads the turns table, runs the full pipeline (salted repartition -> one
-fused mention detection + linking + canonicalization pass -> triple
-assembly), forces
-materialization (noop sink, or a partitioned graph-table write when --output
+Reads the turns table, runs the full pipeline (one (conv_id, turn block)
+repartition -> one mapInPandas: mention detection, linking,
+canonicalization and window triple pairing), forces materialization (noop sink, or a partitioned graph-table write when --output
 is given) and prints ONE JSON line with wall-clock + turns/sec. The master
 is taken from spark-submit's --master (local[N] here; a cluster manager URL
 on a real cluster — the job code is identical).
@@ -68,17 +67,11 @@ def main() -> None:
     # slow disk they are also the dominant run-to-run noise):
     # 1. JVM + codegen warm;
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # 2. python worker pool + numpy/model/lexicon-index imports warm (tiny
-    #    run through the REAL fused mention -> link -> canonicalize pass
-    #    that run_pipeline times, on every task slot);
-    from reach_banner_spark.operators.mentions import (
-        detect_linked_mentions,
-        fused_broadcast,
-    )
-
-    detect_linked_mentions(
-        turns.limit(4096).repartition(args.parallelism),
-        fused_broadcast(spark, lexicon, model_path),
+    # 2. python worker pool + numpy/model/lexicon-index imports warm (a
+    #    4096-turn slice through the REAL run_pipeline that is timed, on
+    #    every task slot);
+    run_pipeline(
+        turns.limit(4096), lexicon, model_path, window_turns=args.window_turns
     ).write.format("noop").mode("overwrite").save()
 
     t0 = time.time()

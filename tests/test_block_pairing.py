@@ -1,0 +1,109 @@
+"""Spark-free property tests of the block triple pass's pairing
+(``whole_groups`` + ``pair_mentions``) against the loop oracle
+``assemble_triples_pandas``: turns copied into blocks by the halo rule,
+rows shuffled within each block, batches cut at arbitrary points."""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+TRIPLE_COLS = ["conv_id", "window_start", "subj", "pred", "obj"]
+ROLES = ["user", "assistant", "tool", "system", "", None]
+TOOLS = ["", None, "search", "python"]
+
+
+@st.composite
+def corpora(draw):
+    """(turns, mentions, block, window_turns, cuts, seed): up to three
+    conversations of up to ~6 blocks, null/empty roles and tools,
+    several mentions per turn over a small entity domain (same-turn
+    pairs, ``subj == obj``, duplicate and null-canonical mentions)."""
+    block = draw(st.integers(1, 5))
+    window = draw(st.integers(0, 4))
+    turns, mentions = [], []
+    for ci in range(draw(st.integers(1, 3))):
+        conv = f"c{ci}"
+        n = draw(st.integers(1, 6 * block + window))
+        # gaps in turn_idx, as after a filter upstream, and negative
+        # turns, whose blocks floor below zero
+        for t in sorted(draw(st.sets(st.integers(-3, n), min_size=1, max_size=n))):
+            turns.append((conv, t, draw(st.sampled_from(ROLES)), draw(st.sampled_from(TOOLS))))
+            for _ in range(draw(st.integers(0, 3))):
+                c = draw(st.integers(0, 4))
+                canon = draw(st.sampled_from(["A", "B", "C", None]))
+                mentions.append((conv, t, c, canon))
+    cuts = draw(st.lists(st.integers(0, 200), max_size=6))
+    return (
+        pd.DataFrame(turns, columns=["conv_id", "turn_idx", "role", "tool"]),
+        pd.DataFrame(
+            mentions, columns=["conv_id", "turn_idx", "begin_char", "canonical"]
+        ).astype({"turn_idx": "int64", "begin_char": "int64"}),
+        block,
+        window,
+        cuts,
+        draw(st.integers(0, 2**16)),
+    )
+
+
+def _block_rows(turns, mentions, block, window, seed):
+    """Each mention once per block of its turn (halo rule), with ``own``
+    on its own block's copy; grouped by (conv_id, blk) in order, rows in
+    random order within a group — the order the sorted exchange gives."""
+    rows = mentions.merge(turns, on=["conv_id", "turn_idx"])
+    t = rows["turn_idx"].to_numpy()
+    first, home = (t - window) // block, t // block
+    reps = home - first + 1
+    out = rows.loc[rows.index.repeat(reps)].reset_index(drop=True)
+    out["blk"] = np.repeat(first, reps) + (
+        np.arange(reps.sum()) - np.repeat(np.cumsum(reps) - reps, reps)
+    )
+    out["own"] = out["blk"].to_numpy() == np.repeat(home, reps)
+    rng = np.random.default_rng(seed)
+    out = out.iloc[rng.permutation(len(out))]
+    return out.sort_values(["conv_id", "blk"], kind="stable").reset_index(drop=True)
+
+
+def _run_blocks(rows, window, cuts):
+    from reach_banner_spark.operators.triples import pair_mentions, whole_groups
+
+    edges = sorted({min(c, len(rows)) for c in cuts} | {0, len(rows)})
+    batches = [rows.iloc[a:b] for a, b in zip(edges, edges[1:])]
+    outs = [pair_mentions(chunk, window) for chunk in whole_groups(iter(batches))]
+    got = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=TRIPLE_COLS)
+    return [tuple(r) for r in got[TRIPLE_COLS].itertuples(index=False, name=None)]
+
+
+def _oracle(mentions, turns, window):
+    from reach_banner_spark.operators.triples import assemble_triples_pandas
+
+    want = assemble_triples_pandas(mentions, turns, window_turns=window)
+    return {tuple(r) for r in want[TRIPLE_COLS].itertuples(index=False, name=None)}
+
+
+@settings(max_examples=150, deadline=None)
+@given(corpora())
+def test_block_pairing_equals_loop_oracle(corpus):
+    turns, mentions, block, window, cuts, seed = corpus
+    got = _run_blocks(_block_rows(turns, mentions, block, window, seed), window, cuts)
+    # each triple from exactly one block: no distinct across blocks needed
+    assert len(got) == len(set(got))
+    assert set(got) == _oracle(mentions, turns, window)
+
+
+@settings(max_examples=100, deadline=None)
+@given(corpora(), st.integers(0, 30))
+def test_block_pairing_new_objects_complete_the_stream(corpus, split):
+    """The stream's per-batch contract: pairs whose object turn is new
+    (turn_idx >= split), with subjects from tail and new turns, add
+    exactly what the old turns' triples lack."""
+    turns, mentions, block, window, cuts, seed = corpus
+    rows = _block_rows(turns, mentions, block, window, seed)
+    rows["new"] = rows["turn_idx"] >= split
+    got = set(_run_blocks(rows, window, cuts))
+    old = _oracle(mentions[mentions["turn_idx"] < split], turns, window)
+    assert got | old == _oracle(mentions, turns, window)
+    # every emitted window reaches a new turn
+    assert all(t[1] + window >= split for t in got)

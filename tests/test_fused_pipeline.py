@@ -1,6 +1,6 @@
-"""The fused mention -> link -> canonicalize pass (one mapInPandas) must
-reproduce the operator composition row for row, and ``run_pipeline`` must
-plan it as one Python map behind a full-width salt shuffle."""
+"""The fused mention -> link -> canonicalize core must reproduce the
+operator composition row for row, and ``run_pipeline`` must plan turn to
+triple as one Python map behind one full-width block shuffle."""
 
 from __future__ import annotations
 
@@ -33,40 +33,50 @@ def _with_fuzzy_turns(turns_pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.concat([turns_pdf, extra], ignore_index=True)
 
 
-def _rows(df) -> list[tuple]:
-    pdf = df.select(*COLS).toPandas()
+def _tuples(pdf: pd.DataFrame) -> list[tuple]:
     return sorted(
         tuple(None if (not isinstance(v, str) and pd.isna(v)) else v for v in r)
-        for r in pdf.itertuples(index=False, name=None)
+        for r in pdf[COLS].itertuples(index=False, name=None)
     )
+
+
+def _rows(df) -> list[tuple]:
+    return _tuples(df.select(*COLS).toPandas())
 
 
 def test_fused_pass_equals_composition(
     spark, small_turns, lexicon_pdf, model_path, monkeypatch
 ):
-    """Row for row against the composition on both sides of the gate.
-    Below it, ``link_mentions`` runs the same ``LexiconIndex.link`` as
-    the fused pass; with ``LEX_GATE`` at 0 the composition is the
-    independent Spark-join + distributed-components implementation."""
+    """The per-batch core of the block pass (``link_rows``) row for row
+    against the composition on both sides of the gate. Below it,
+    ``link_mentions`` runs the same ``LexiconIndex.link`` as the fused
+    core; with ``LEX_GATE`` at 0 the composition is the independent
+    Spark-join + distributed-components implementation."""
     from reach_banner_spark.operators import linking
     from reach_banner_spark.operators.linking import link_mentions
     from reach_banner_spark.operators.mentions import (
-        detect_linked_mentions,
+        _load_model_bytes,
         detect_mentions,
         fused_broadcast,
+        link_rows,
         paren_balanced,
     )
     from reach_banner_spark.plans.pipeline import apply_canonical, canonical_rep_map
 
-    turns_pdf, _ = small_turns
-    turns = spark.createDataFrame(_with_fuzzy_turns(turns_pdf), schema=schemas.TURNS)
+    turns_pdf = _with_fuzzy_turns(small_turns[0])
+    turns = spark.createDataFrame(turns_pdf, schema=schemas.TURNS)
     lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
 
     mentions = detect_mentions(turns, model_path).filter(paren_balanced("surface"))
     mentions = mentions.persist()
     raw = link_mentions(mentions, lexicon)
     want = _rows(apply_canonical(raw, canonical_rep_map(spark, lexicon)))
-    got = _rows(detect_linked_mentions(turns, fused_broadcast(spark, lexicon, model_path)))
+    blob, index = fused_broadcast(spark, lexicon, model_path).value
+    linked = link_rows(turns_pdf["text"], _load_model_bytes(blob), index)
+    row = linked.pop("row").to_numpy()
+    linked["conv_id"] = turns_pdf["conv_id"].to_numpy()[row]
+    linked["turn_idx"] = turns_pdf["turn_idx"].to_numpy()[row]
+    got = _tuples(linked)
     assert got == want
     monkeypatch.setattr(linking, "LEX_GATE", 0)
     distributed = _rows(
@@ -75,7 +85,7 @@ def test_fused_pass_equals_composition(
     mentions.unpersist()
     assert got == distributed
 
-    # the comparison covers every path of the fused pass
+    # the comparison covers every path of the fused core
     surface, eid = COLS.index("surface"), COLS.index("entity_id")
     key = [COLS.index(c) for c in ("conv_id", "turn_idx", "begin_char", "end_char")]
     raw_eid = {tuple(r[k] for k in key): r[eid] for r in _rows(raw)}
@@ -93,8 +103,10 @@ def test_fused_pass_equals_composition(
 def test_run_pipeline_plan_one_python_map_full_width_salt(
     spark, small_turns, lexicon_pdf, model_path
 ):
-    """One Python map node (the fused pass) and a salt exchange with an
-    explicit partition count, which AQE may not coalesce into one task."""
+    """Below the gate, turn to triple is one Python map node behind ONE
+    exchange: the (conv_id, turn block) repartition at an explicit
+    partition count, which AQE may not coalesce into one task. No join and
+    no aggregate (no cross-partition distinct) is left."""
     from reach_banner_spark.plans.pipeline import run_pipeline
 
     turns_pdf, _ = small_turns
@@ -103,20 +115,45 @@ def test_run_pipeline_plan_one_python_map_full_width_salt(
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     triples = run_pipeline(turns, lexicon, model_path)
     plan = triples._jdf.queryExecution().executedPlan().toString()
-    # the cached subplan prints once per scan of it (and per AQE initial /
-    # final plan): count distinct nodes by expression / plan id
+    # count distinct nodes by expression / plan id (AQE prints the
+    # initial and final plan)
     maps = set(re.findall(r"MapInPandas \w+\([^)]*\)#\d+", plan))
     assert len(maps) == 1, maps
     for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas", "MapInArrow"):
         assert node not in plan, node
-    salt = set(
-        re.findall(
-            r"Exchange hashpartitioning\(pmod\(hash\(conv_id#\d+, turn_idx#\d+, 42\), "
-            r"1048576\), (\d+)\), (\w+), \[plan_id=(\d+)\]",
-            plan,
-        )
-    )
-    assert [(int(w), kind) for w, kind, _ in salt] == [(n, "REPARTITION_BY_NUM")], salt
+    for node in ("Join", "CartesianProduct", "HashAggregate", "SortAggregate"):
+        assert node not in plan, node
+    exchanges = set(re.findall(r"Exchange (.*), \[plan_id=(\d+)\]", plan))
+    block = re.compile(r"hashpartitioning\(conv_id#\d+, blk#\d+L?, (\d+)\), (\w+)")
+    shapes = [block.fullmatch(spec) for spec, _ in exchanges]
+    assert len(exchanges) == 1 and shapes[0], exchanges
+    assert (int(shapes[0][1]), shapes[0][2]) == (n, "REPARTITION_BY_NUM"), exchanges
+
+
+def test_block_pass_small_blocks_across_arrow_batches(
+    spark, small_turns, lexicon_pdf, model_path, monkeypatch
+):
+    """With blocks of ``window_turns + 1`` turns and 7-row Arrow batches,
+    groups and windows straddle batch edges and every window straddles a
+    block edge: the block pass must still give the composition's triples
+    (``LEX_GATE`` at 0)."""
+    from reach_banner_spark.operators import linking, triples
+    from reach_banner_spark.plans.pipeline import run_pipeline
+
+    turns = spark.createDataFrame(_with_fuzzy_turns(small_turns[0]), schema=schemas.TURNS)
+    lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    monkeypatch.setattr(triples, "BLOCK", 3)
+    spark.conf.set(conf, "7")
+    try:
+        got = run_pipeline(turns, lexicon, model_path, window_turns=2).collect()
+    finally:
+        spark.conf.set(conf, before)
+    monkeypatch.setattr(linking, "LEX_GATE", 0)
+    want = run_pipeline(turns, lexicon, model_path, window_turns=2).collect()
+    assert len(got) == len(set(got)), "a triple came from two blocks"
+    assert got and set(got) == set(want)
 
 
 def test_run_pipeline_above_index_gate_same_triples(
@@ -150,3 +187,21 @@ def test_run_pipeline_above_index_gate_same_triples(
     composed = set(pipeline.run_pipeline(turns, lexicon, model_path).collect())
     assert calls == {"fuzzy_best_distributed": 1, "connected_components": 1}, calls
     assert fused and fused == composed
+
+
+def test_above_gate_linking_has_no_broadcast_hint(
+    spark, small_turns, lexicon_pdf, model_path, monkeypatch
+):
+    """Above ``LEX_GATE`` the lexicon is too big for the driver, so the
+    distributed linking path (exact join, band join, best-match joins)
+    must not force broadcasts of the lexicon or its band table."""
+    from reach_banner_spark.operators import linking
+    from reach_banner_spark.operators.mentions import detect_mentions, paren_balanced
+
+    turns = spark.createDataFrame(small_turns[0], schema=schemas.TURNS)
+    lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
+    mentions = detect_mentions(turns, model_path).filter(paren_balanced("surface"))
+    monkeypatch.setattr(linking, "LEX_GATE", 0)
+    plan = linking.link_mentions(mentions, lexicon)._jdf.queryExecution().analyzed().toString()
+    assert "Join" in plan  # the distributed path was planned
+    assert "ResolvedHint" not in plan, plan

@@ -213,24 +213,49 @@ def test_stream_dedup_minhash_equals_batch(spark, tmp_path):
     assert np.allclose(got["jaccard"].to_numpy(), want["jaccard"].to_numpy())
 
 
-def test_stream_kg_equals_batch_pipeline(spark):
-    """The full incremental KG pipeline (CRF mentions -> link ->
-    canonicalize -> triples per micro-batch with tail state) == the
-    one-shot batch run_pipeline on the same turns."""
+def _stream_kg_vs_batch_pipeline(spark) -> tuple[list, list]:
     from reach_banner_spark import schemas
     from reach_banner_spark.fixtures import ensure_model, make_lexicon
     from reach_banner_spark.plans.pipeline import run_pipeline
     from reach_banner_spark.streaming import ops
 
-    got = ops.REGISTRY["stream_kg"][0](spark, SF).toPandas()
-
     turns = spark.read.parquet(ops._staged_turn_stream_dir())
     lexicon = spark.createDataFrame(make_lexicon(), schema=schemas.LEXICON)
     want = run_pipeline(turns, lexicon, ensure_model(), window_turns=2).toPandas()
+    got = ops.REGISTRY["stream_kg"][0](spark, SF).toPandas()
 
     cols = ["conv_id", "window_start", "subj", "pred", "obj"]
     ga = sorted(map(tuple, got[cols].values.tolist()))
     wa = sorted(map(tuple, want[cols].values.tolist()))
+    return ga, wa
+
+
+def test_stream_kg_equals_batch_pipeline(spark):
+    """The full incremental KG pipeline (CRF mentions -> link ->
+    canonicalize -> triples per micro-batch with tail state) == the
+    one-shot batch run_pipeline on the same turns."""
+    ga, wa = _stream_kg_vs_batch_pipeline(spark)
+    assert len(ga) > 0
+    assert ga == wa
+
+
+def test_stream_kg_above_lexicon_gate_equals_batch_pipeline(spark, monkeypatch):
+    """Above the lexicon gate (``LEX_GATE`` forced to 0) ``stream_kg``
+    runs the composition per micro-batch (distributed fuzzy linking, one
+    representative map per stream) and still gives the one-shot triples."""
+    from reach_banner_spark.operators import linking
+
+    real = linking.fuzzy_best_distributed
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(linking, "fuzzy_best_distributed", counted)
+    monkeypatch.setattr(linking, "LEX_GATE", 0)
+    ga, wa = _stream_kg_vs_batch_pipeline(spark)
+    assert calls, "the stream did not take the distributed path"
     assert len(ga) > 0
     assert ga == wa
 
