@@ -31,56 +31,50 @@ def fnv1a_bytes(data: bytes) -> int:
 
 
 def hash_str_array(strings: np.ndarray, space: int = FEATURE_SPACE) -> np.ndarray:
-    """Hash an object array of strings to int64 indices in [0, space).
+    """Hash an object array of strings to int64 indices in [0, space):
+    ``fnv64_array`` modulo ``space``. Deterministic across runs, Python
+    versions, and machines (unlike built-in ``hash``)."""
+    return (fnv64_array(strings) % np.uint64(space)).astype(np.int64)
 
-    Vectorized: encodes all strings into one contiguous byte buffer and runs
-    a batched FNV-1a over fixed-length chunks. Deterministic across runs,
-    Python versions, and machines (unlike built-in ``hash``).
-    """
-    n = len(strings)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    encoded = [s.encode("utf-8") for s in strings]
-    lens = np.fromiter((len(b) for b in encoded), count=n, dtype=np.int64)
-    maxlen = int(lens.max()) if n else 0
-    buf = np.zeros((n, maxlen), dtype=np.uint8)
-    flat = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    # Scatter variable-length byte strings into the padded matrix.
-    col_idx = np.arange(maxlen)
-    mask = col_idx[None, :] < lens[:, None]
-    buf[mask] = flat
-    h = np.full(n, _FNV_OFFSET, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(maxlen):
-            active = lens > j
-            h[active] ^= buf[active, j].astype(np.uint64)
-            h[active] *= _FNV_PRIME
-    return (h % np.uint64(space)).astype(np.int64)
+
+# ``fnv64_array`` hashes the strings still longer than j bytes in one
+# numpy step per byte position j; once fewer than this many remain, the
+# rest (a few long strings) go through the scalar ``fnv1a_bytes`` instead
+# of one numpy step per remaining byte.
+_VEC_MIN_ACTIVE = 32
 
 
 def fnv64_array(strings: np.ndarray) -> np.ndarray:
-    """Full 64-bit FNV-1a per string (uint64), vectorized like
-    ``hash_str_array`` but without the modulo — used as the value-hash that
-    feature families numerically mix (see operators/features.py)."""
+    """Full 64-bit FNV-1a per string (uint64): the value hash that feature
+    families numerically mix (see operators/features.py).
+
+    Runs over ONE flat UTF-8 buffer of all strings. The strings are sorted
+    by length, longest first, so the strings still active at byte
+    position j are a prefix of that order: step j reads byte j of each of
+    them straight from the buffer. Memory is O(total bytes), whatever the
+    longest string."""
     n = len(strings)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    encoded = [s.encode("utf-8") for s in strings]
-    lens = np.fromiter((len(b) for b in encoded), count=n, dtype=np.int64)
-    maxlen = int(lens.max()) if n else 0
-    buf = np.zeros((n, max(1, maxlen)), dtype=np.uint8)
-    flat = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-    col_idx = np.arange(max(1, maxlen))
-    mask = col_idx[None, :] < lens[:, None]
-    buf[mask] = flat
     h = np.full(n, _FNV_OFFSET, dtype=np.uint64)
+    if n == 0:
+        return h
+    encoded = [s.encode("utf-8") for s in strings]
+    lens = np.fromiter(map(len, encoded), count=n, dtype=np.int64)
+    flat = np.frombuffer(b"".join(encoded), dtype=np.uint8)
+    order = np.argsort(-lens, kind="stable")
+    pos = (np.cumsum(lens) - lens)[order]
+    hv = h[order]
+    # active[j] = number of strings longer than j bytes (0 at the longest)
+    active = n - np.cumsum(np.bincount(lens))
+    j = 0
     with np.errstate(over="ignore"):
-        for j in range(maxlen):
-            active = lens > j
-            h[active] ^= buf[active, j].astype(np.uint64)
-            h[active] *= _FNV_PRIME
+        while active[j] >= _VEC_MIN_ACTIVE:
+            k = active[j]
+            hv[:k] ^= flat[pos[:k] + j]
+            hv[:k] *= _FNV_PRIME
+            j += 1
+    h[order] = hv
+    for i in order[: active[j]]:
+        h[i] = fnv1a_bytes(encoded[i])
     return h
 
 

@@ -13,7 +13,9 @@ Engine re-expression:
   ``transition[L+1, L]`` (row L = start) — broadcast once per executor and
   cached module-level in the Python worker;
 - decode is a *batched* vectorized Viterbi over all turns of an Arrow batch
-  at once (pad to max length, DP over time on (B, L) score planes);
+  at once, unpadded: the DP runs over the flat token array, step t on the
+  (k_t, L) score plane of the k_t turns still running, so its work and
+  memory grow with the batch's tokens, not with its longest turn;
 - training (out of the query path; used only to produce the committed
   deterministic fixture weights, SURVEY.md §2.1 P9) is a seeded averaged
   structured perceptron — exactly reproducible, unlike L-BFGS on floats.
@@ -83,6 +85,18 @@ def emission_scores(model: CrfModel, feat_idx: np.ndarray) -> np.ndarray:
     return model.emission[feat_idx].sum(axis=1)
 
 
+def _by_length(seq_lens: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The non-empty sequences longest first, as (flat offsets, lengths),
+    and ``active[t]``, the number of sequences longer than t: the
+    sequences still running at step t are the first ``active[t]``."""
+    seq_lens = np.asarray(seq_lens, dtype=np.int64)
+    order = np.argsort(-seq_lens, kind="stable")
+    lens = seq_lens[order]
+    active = len(lens) - np.cumsum(np.bincount(lens))[:-1]
+    B = int(active[0])
+    return (np.cumsum(seq_lens) - seq_lens)[order][:B], lens[:B], active
+
+
 def viterbi_batch(
     emit_flat: np.ndarray, seq_lens: np.ndarray, transition: np.ndarray
 ) -> np.ndarray:
@@ -90,45 +104,39 @@ def viterbi_batch(
 
     ``emit_flat``: (total_tokens, L) emission scores, sequences concatenated;
     ``seq_lens``: (B,) lengths. Returns flat int8 label array (total_tokens,).
+
+    No padding: the float32 DP runs over the flat token array. With the
+    sequences sorted by length once, step t touches only the
+    ``active[t]`` sequences still running, and the back-pointers are
+    (total_tokens, L), so work and memory grow with the tokens, not with
+    the longest sequence.
     """
     total = emit_flat.shape[0]
     if total == 0:
         return np.empty(0, dtype=np.int8)
-    L = emit_flat.shape[1]
-    B = len(seq_lens)
-    T = int(seq_lens.max())
-    # pad into (B, T, L); padded slots get 0 emission (they are masked out of
-    # the backtrace by seq_lens, and 0 keeps the DP finite)
-    emit = np.zeros((B, T, L), dtype=np.float32)
-    rows = np.repeat(np.arange(B), seq_lens)
-    cols = np.concatenate([np.arange(n) for n in seq_lens])
-    emit[rows, cols] = emit_flat
-    return _viterbi_backtrace(emit, seq_lens, transition, rows, cols)
-
-
-def _viterbi_backtrace(
-    emit: np.ndarray, seq_lens: np.ndarray, transition: np.ndarray,
-    rows: np.ndarray, cols: np.ndarray,
-) -> np.ndarray:
-    B, T, L = emit.shape
+    emit = emit_flat.astype(np.float32, copy=False)
+    L = emit.shape[1]
     trans = transition[:L]
-    deltas = np.empty((B, T, L), dtype=np.float32)
-    back = np.zeros((B, T, L), dtype=np.int8)
-    deltas[:, 0] = transition[L][None, :] + emit[:, 0]
-    for t in range(1, T):
-        scores = deltas[:, t - 1][:, :, None] + trans[None, :, :]
-        back[:, t] = np.argmax(scores, axis=1).astype(np.int8)
-        deltas[:, t] = np.max(scores, axis=1) + emit[:, t]
-    labels = np.zeros((B, T), dtype=np.int8)
-    last = seq_lens - 1
-    cur = np.argmax(deltas[np.arange(B), last], axis=1).astype(np.int8)
-    labels[np.arange(B), last] = cur
-    for t in range(T - 1, 0, -1):
-        active = last >= t
-        prev = back[np.arange(B), t, cur]
-        cur = np.where(active, prev, cur).astype(np.int8)
-        labels[:, t - 1] = np.where(active, cur, labels[:, t - 1])
-    return labels[rows, cols]
+    offs, lens, active = _by_length(seq_lens)
+    delta = np.empty((len(offs), L), dtype=np.float32)
+    delta[:] = transition[L][None, :] + emit[offs]
+    back = np.zeros((total, L), dtype=np.int8)
+    for t in range(1, len(active)):
+        k = active[t]
+        pos = offs[:k] + t
+        scores = delta[:k, :, None] + trans[None, :, :]
+        back[pos] = np.argmax(scores, axis=1)
+        delta[:k] = np.max(scores, axis=1) + emit[pos]
+    # each sequence's delta stopped at its own last step
+    labels = np.empty(total, dtype=np.int8)
+    cur = np.argmax(delta, axis=1).astype(np.int8)
+    labels[offs + lens - 1] = cur
+    for t in range(len(active) - 1, 0, -1):
+        k = active[t]
+        pos = offs[:k] + t
+        cur[:k] = back[pos, cur[:k]]
+        labels[pos - 1] = cur[:k]
+    return labels
 
 
 def decode(model: CrfModel, feat_idx: np.ndarray, seq_lens: np.ndarray) -> np.ndarray:
@@ -190,49 +198,41 @@ def viterbi2_batch(
     """Order-2 Viterbi over pair states, vectorized across the batch.
 
     delta[b, j, k] = best score of a sequence ending with (label j at t-1,
-    label k at t); step: max over i of delta[b, i, j] + T2[i, j, k].
+    label k at t); step: max over i of delta[b, i, j] + T2[i, j, k]. Same
+    unpadded DP over the flat token array as ``viterbi_batch``.
     """
     total = emit_flat.shape[0]
     if total == 0:
         return np.empty(0, dtype=np.int8)
-    L = emit_flat.shape[1]
-    B = len(seq_lens)
-    T = int(seq_lens.max())
-    emit = np.zeros((B, T, L), dtype=np.float32)
-    rows = np.repeat(np.arange(B), seq_lens)
-    cols = np.concatenate([np.arange(n) for n in seq_lens])
-    emit[rows, cols] = emit_flat
-
+    emit = emit_flat.astype(np.float32, copy=False)
+    L = emit.shape[1]
+    offs, lens, active = _by_length(seq_lens)
     NEG = np.float32(-1e30)
-    # t = 0: only (j=START) pairs are reachable; store delta over (j, k)
-    delta = np.full((B, L + 1, L), NEG, dtype=np.float32)
-    delta[:, L, :] = t2[L, L, :][None, :] + emit[:, 0]
-    deltas = np.empty((B, T, L + 1, L), dtype=np.float32)
-    back = np.zeros((B, T, L + 1, L), dtype=np.int8)
-    deltas[:, 0] = delta
-    for t in range(1, T):
+    # t = 0: only (j=START) pairs are reachable; delta over (j, k)
+    delta = np.full((len(offs), L + 1, L), NEG, dtype=np.float32)
+    delta[:, L, :] = t2[L, L, :][None, :] + emit[offs]
+    back = np.zeros((total, L + 1, L), dtype=np.int8)
+    for t in range(1, len(active)):
+        k = active[t]
+        pos = offs[:k] + t
         # scores[b, i, j, k] = delta[b, i, j] + t2[i, j, k]
-        scores = deltas[:, t - 1][:, :, : , None] + t2[:, :L, :][None, :, :, :]
-        back[:, t, :L, :] = np.argmax(scores, axis=1).astype(np.int8)[:, :, :]
-        best = np.max(scores, axis=1)  # (B, j<=L? , k) -> (B, L, L)
-        new = np.full((B, L + 1, L), NEG, dtype=np.float32)
-        new[:, :L, :] = best + emit[:, t][:, None, :]
-        deltas[:, t] = new
-    labels = np.zeros((B, T), dtype=np.int8)
-    last = seq_lens - 1
-    flat = deltas[np.arange(B), last].reshape(B, -1)
-    arg = np.argmax(flat, axis=1)
+        scores = delta[:k, :, :, None] + t2[:, :L, :][None, :, :, :]
+        back[pos, :L, :] = np.argmax(scores, axis=1)
+        delta[:k, :L, :] = np.max(scores, axis=1) + emit[pos][:, None, :]
+        delta[:k, L, :] = NEG
+    labels = np.empty(total, dtype=np.int8)
+    arg = np.argmax(delta.reshape(len(offs), -1), axis=1)
     cur_j = (arg // L).astype(np.int8)  # label at t-1 (or START)
     cur_k = (arg % L).astype(np.int8)  # label at t
-    labels[np.arange(B), last] = cur_k
-    for t in range(T - 1, 0, -1):
-        active = last >= t
-        prev_i = back[np.arange(B), t, np.minimum(cur_j, L), cur_k]
-        labels[:, t - 1] = np.where(active, cur_j, labels[:, t - 1])
-        nj = np.where(active, prev_i, cur_j).astype(np.int8)
-        nk = np.where(active, cur_j, cur_k).astype(np.int8)
-        cur_j, cur_k = nj, nk
-    return labels[rows, cols]
+    labels[offs + lens - 1] = cur_k
+    for t in range(len(active) - 1, 0, -1):
+        k = active[t]
+        pos = offs[:k] + t
+        prev_i = back[pos, np.minimum(cur_j[:k], L), cur_k[:k]]
+        labels[pos - 1] = cur_j[:k]
+        cur_k[:k] = cur_j[:k]
+        cur_j[:k] = prev_i
+    return labels
 
 
 def decode2(model: Crf2Model, feat_idx: np.ndarray, seq_lens: np.ndarray) -> np.ndarray:

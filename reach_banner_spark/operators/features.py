@@ -20,8 +20,14 @@ token of a 10^12-turn corpus):
    ``idx = mix64(value_hash, FAMILY_SALT) % FEATURE_SPACE``; conjunctions
    mix the participating value hashes. Same role as the hashing trick
    (SURVEY.md P8) with zero string construction on the hot path.
-3. Window features shift the int64 hash arrays (not the strings), with
-   sentinel hashes at sequence boundaries.
+3. Window features shift the int factorize codes (not the strings) within
+   the sentence, with BOS/EOS sentinel rows at sequence boundaries.
+4. **Emission per unique token.** Decoding never builds the (n_tokens,
+   N_FEATURES) index matrix: 18 of the 21 families depend on one token's
+   value (its own or a neighbour's), so ``emission_flat`` gathers their
+   weight rows once per unique token and indexes them per token; only the
+   3 conjunctions hash per token. Training keeps ``featurize_flat``; both
+   read the one family table (``_UNARY``, ``_CONJ``).
 
 The Dragon lemmatizer and Hepple tagger are tens of kLoC the reference
 bundles but did not author; the engine substitutes a deterministic
@@ -37,19 +43,30 @@ import pandas as pd
 
 from ..functions.hashing import FEATURE_SPACE, fnv64_array, mix64, to_space
 
+# The feature families, in feature-matrix column order. A unary family
+# (name, value, offset) is one value hash of the token at ``offset`` in its
+# sentence (BOS/EOS sentinel past the sentence ends); a conjunction (name,
+# parts) mixes the value hashes of several (value, offset) parts.
+_UNARY = (
+    ("W", "W", 0), ("SH", "SH", 0), ("BR", "BR", 0), ("LM", "LM", 0),
+    ("POS", "POS", 0), ("P2", "P2", 0), ("P3", "P3", 0), ("S2", "S2", 0),
+    ("S3", "S3", 0), ("KL", "KL", 0),
+    ("W-1", "W", -1), ("W-2", "W", -2), ("W+1", "W", 1), ("W+2", "W", 2),
+    ("POS-1", "POS", -1), ("POS+1", "POS", 1), ("SH-1", "SH", -1), ("SH+1", "SH", 1),
+)
+_CONJ = (
+    ("W-1|W", (("W", -1), ("W", 0))),
+    ("W|W+1", (("W", 0), ("W", 1))),
+    ("SH-1|SH|SH+1", (("SH", -1), ("SH", 0), ("SH", 1))),
+)
+
 # Number of hashed feature slots per token (fixed-width feature matrix).
-N_FEATURES = 21
+N_FEATURES = len(_UNARY) + len(_CONJ)
 
 # family salts (arbitrary distinct constants, fixed forever)
 _FAM = {
     name: np.uint64(0x9E3779B97F4A7C15 * (i + 1) & 0xFFFFFFFFFFFFFFFF)
-    for i, name in enumerate(
-        [
-            "W", "SH", "BR", "LM", "POS", "P2", "P3", "S2", "S3", "KL",
-            "W-1", "W-2", "W+1", "W+2", "POS-1", "POS+1", "SH-1", "SH+1",
-            "W-1|W", "W|W+1", "SH-1|SH|SH+1",
-        ]
-    )
+    for i, name in enumerate([f for f, _, _ in _UNARY] + [f for f, _ in _CONJ])
 }
 _BOS = np.uint64(0x1111111111111111)  # sentinel hash for <S>
 _EOS = np.uint64(0x2222222222222222)  # sentinel hash for </S>
@@ -154,17 +171,61 @@ def token_class(tokens: np.ndarray) -> np.ndarray:
     return out
 
 
-def _shift_h(h: np.ndarray, sent_start: np.ndarray, sent_end: np.ndarray,
-             k: int) -> np.ndarray:
-    """Neighbor value-hash at offset k within the same sentence, else sentinel."""
-    n = len(h)
-    out = np.full(n, _BOS if k < 0 else _EOS, dtype=np.uint64)
-    if n == 0:
-        return out
-    idx = np.arange(n) + k
-    valid = (idx >= sent_start) & (idx <= sent_end)
-    out[valid] = h[idx[valid]]
-    return out
+def _family_inputs(
+    tokens: np.ndarray, seq_ids: np.ndarray
+) -> tuple[dict[str, np.ndarray], dict[int, np.ndarray]]:
+    """The inputs every family reads, for a non-empty flat batch.
+
+    ``values[v]``: the uint64 value hash ``v`` of each UNIQUE token, plus
+    a BOS row (index n_unique) and an EOS row (n_unique + 1).
+    ``codes[k]``: per token, the row of ``values`` for the token at offset
+    k in the same sentence, or the BOS/EOS row past the sentence ends."""
+    n = len(tokens)
+    # sentence start/end flat index per token
+    change = np.flatnonzero(np.diff(seq_ids)) + 1
+    starts = np.concatenate(([0], change))
+    counts = np.diff(np.concatenate((starts, [n])))
+    sent_start = np.repeat(starts, counts)
+    sent_end = np.repeat(starts + counts - 1, counts)
+
+    # ---- per-UNIQUE-token string derivations ----
+    code, uniques = pd.factorize(tokens)
+    uniq = np.asarray(uniques, dtype=object)
+    lower_u = np.array([t.lower() for t in uniq], dtype=object)
+    shape_u = word_shape(uniq)
+    derived = {
+        "W": lower_u,
+        "SH": shape_u,
+        "BR": brief_shape(shape_u),
+        "LM": lemmatize(lower_u),
+        "POS": pos_tag(uniq, lower_u),
+        "P2": np.array([t[:2] for t in lower_u], dtype=object),
+        "P3": np.array([t[:3] for t in lower_u], dtype=object),
+        "S2": np.array([t[-2:] for t in lower_u], dtype=object),
+        "S3": np.array([t[-3:] for t in lower_u], dtype=object),
+        "KL": token_class(uniq),
+    }
+    sentinels = np.array([_BOS, _EOS], dtype=np.uint64)
+    values = {v: np.concatenate((fnv64_array(a), sentinels)) for v, a in derived.items()}
+
+    # window codes: shift the int codes (not the strings) within the sentence
+    bos, eos = len(uniq), len(uniq) + 1
+    codes = {0: code}
+    idx = np.arange(n)
+    for k in (-2, -1, 1, 2):
+        j = idx + k
+        valid = (j >= sent_start) & (j <= sent_end)
+        codes[k] = np.where(valid, code[np.clip(j, 0, n - 1)], bos if k < 0 else eos)
+    return values, codes
+
+
+def _conj_hash(values, codes, parts) -> np.ndarray:
+    """Per token: the value hashes of a conjunction's parts, mixed in order."""
+    h = None
+    for v, k in parts:
+        hv = values[v][codes[k]]
+        h = hv if h is None else mix64(h, hv)
+    return h
 
 
 def featurize_flat(
@@ -174,78 +235,48 @@ def featurize_flat(
 
     ``tokens`` is the object array of all tokens of all turns in the batch,
     ``seq_ids`` the parallel int array identifying each token's turn
-    (non-decreasing).
+    (non-decreasing). The training input; decoding reads the same families
+    through ``emission_flat`` without building this matrix.
     """
-    n = len(tokens)
-    if n == 0:
+    if len(tokens) == 0:
         return np.empty((0, N_FEATURES), dtype=np.int64)
-    # sentence start/end flat index per token
-    change = np.flatnonzero(np.diff(seq_ids)) + 1
-    starts = np.concatenate(([0], change))
-    counts = np.diff(np.concatenate((starts, [n])))
-    sent_start = np.repeat(starts, counts)
-    sent_end = np.repeat(starts + counts - 1, counts)
-
-    # ---- per-UNIQUE-token string derivations ----
-    codes, uniques = pd.factorize(tokens)
-    uniq = np.asarray(uniques, dtype=object)
-    lower_u = np.array([t.lower() for t in uniq], dtype=object)
-    shape_u = word_shape(uniq)
-    brief_u = brief_shape(shape_u)
-    lemma_u = lemmatize(lower_u)
-    pos_u = pos_tag(uniq, lower_u)
-    klass_u = token_class(uniq)
-    pre2_u = np.array([t[:2] for t in lower_u], dtype=object)
-    pre3_u = np.array([t[:3] for t in lower_u], dtype=object)
-    suf2_u = np.array([t[-2:] for t in lower_u], dtype=object)
-    suf3_u = np.array([t[-3:] for t in lower_u], dtype=object)
-
-    # 64-bit value hashes per unique, broadcast to tokens via codes
-    hW = fnv64_array(lower_u)[codes]
-    hSH = fnv64_array(shape_u)[codes]
-    hBR = fnv64_array(brief_u)[codes]
-    hLM = fnv64_array(lemma_u)[codes]
-    hPOS = fnv64_array(pos_u)[codes]
-    hP2 = fnv64_array(pre2_u)[codes]
-    hP3 = fnv64_array(pre3_u)[codes]
-    hS2 = fnv64_array(suf2_u)[codes]
-    hS3 = fnv64_array(suf3_u)[codes]
-    hKL = fnv64_array(klass_u)[codes]
-
-    # window value-hashes (shift the numeric arrays, not the strings)
-    hW_m1 = _shift_h(hW, sent_start, sent_end, -1)
-    hW_m2 = _shift_h(hW, sent_start, sent_end, -2)
-    hW_p1 = _shift_h(hW, sent_start, sent_end, 1)
-    hW_p2 = _shift_h(hW, sent_start, sent_end, 2)
-    hPOS_m1 = _shift_h(hPOS, sent_start, sent_end, -1)
-    hPOS_p1 = _shift_h(hPOS, sent_start, sent_end, 1)
-    hSH_m1 = _shift_h(hSH, sent_start, sent_end, -1)
-    hSH_p1 = _shift_h(hSH, sent_start, sent_end, 1)
-
-    cols = [
-        to_space(mix64(hW, _FAM["W"]), space),
-        to_space(mix64(hSH, _FAM["SH"]), space),
-        to_space(mix64(hBR, _FAM["BR"]), space),
-        to_space(mix64(hLM, _FAM["LM"]), space),
-        to_space(mix64(hPOS, _FAM["POS"]), space),
-        to_space(mix64(hP2, _FAM["P2"]), space),
-        to_space(mix64(hP3, _FAM["P3"]), space),
-        to_space(mix64(hS2, _FAM["S2"]), space),
-        to_space(mix64(hS3, _FAM["S3"]), space),
-        to_space(mix64(hKL, _FAM["KL"]), space),
-        to_space(mix64(hW_m1, _FAM["W-1"]), space),
-        to_space(mix64(hW_m2, _FAM["W-2"]), space),
-        to_space(mix64(hW_p1, _FAM["W+1"]), space),
-        to_space(mix64(hW_p2, _FAM["W+2"]), space),
-        to_space(mix64(hPOS_m1, _FAM["POS-1"]), space),
-        to_space(mix64(hPOS_p1, _FAM["POS+1"]), space),
-        to_space(mix64(hSH_m1, _FAM["SH-1"]), space),
-        to_space(mix64(hSH_p1, _FAM["SH+1"]), space),
-        # conjunctions (OffsetConjunctions analogue): mix value hashes
-        to_space(mix64(mix64(hW_m1, hW), _FAM["W-1|W"]), space),
-        to_space(mix64(mix64(hW, hW_p1), _FAM["W|W+1"]), space),
-        to_space(
-            mix64(mix64(mix64(hSH_m1, hSH), hSH_p1), _FAM["SH-1|SH|SH+1"]), space
-        ),
+    values, codes = _family_inputs(tokens, seq_ids)
+    cols = [to_space(mix64(values[v][codes[k]], _FAM[f]), space) for f, v, k in _UNARY]
+    cols += [
+        to_space(mix64(_conj_hash(values, codes, parts), _FAM[f]), space)
+        for f, parts in _CONJ
     ]
     return np.stack(cols, axis=1)
+
+
+def emission_flat(
+    tokens: np.ndarray, seq_ids: np.ndarray, emission: np.ndarray
+) -> np.ndarray:
+    """Per-token emission scores (n_tokens, L) of a flat batch, bit for bit
+    ``emission[featurize_flat(tokens, seq_ids)].sum(axis=1)`` (the
+    ``crf.emission_scores`` of that matrix) without the (n_tokens,
+    N_FEATURES) index matrix or its (n_tokens, N_FEATURES, L) gather.
+
+    A unary family's score depends only on the value of one token, so its
+    ``emission`` row is gathered once per unique token (and per sentinel)
+    and then indexed per token by the window codes. The terms are added in
+    column order, so the float32 sums round exactly as the reference's:
+    the leading offset-0 families sum per unique token, each later family
+    adds its per-token gather, and only the conjunctions hash per token.
+    """
+    if len(tokens) == 0:
+        return np.zeros((0, emission.shape[1]), dtype=emission.dtype)
+    values, codes = _family_inputs(tokens, seq_ids)
+    acc_u = None  # per-unique partial sum while the families are offset-0
+    acc = None
+    for f, v, k in _UNARY:
+        rows = emission[to_space(mix64(values[v], _FAM[f]))]
+        if acc is None and k == 0:
+            acc_u = rows if acc_u is None else acc_u + rows
+            continue
+        if acc is None:
+            acc = acc_u[codes[0]]
+        acc += rows[codes[k]]
+    for f, parts in _CONJ:
+        acc += emission[to_space(mix64(_conj_hash(values, codes, parts), _FAM[f]))]
+    return acc

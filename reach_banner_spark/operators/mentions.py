@@ -32,8 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import schemas
-from .crf import CrfModel, emission_scores, viterbi2_batch, viterbi_batch
-from .features import featurize_flat
+from .crf import CrfModel, viterbi2_batch, viterbi_batch
+from .features import emission_flat
 from .tagformat import labels_to_spans
 from .tokenizer import tokenize_flat
 
@@ -89,35 +89,58 @@ def recognize_rows(
     (reference recognizer). Keying by position rather than by
     (conv_id, turn_idx) lets a batch hold one turn twice (the block pass's
     halo copies) and map each mention back to its own row.
+
+    Its kernels grow with the batch's tokens, not with its longest turn:
+    ``tokenize_flat`` (one ``findall``, numpy offsets), ``emission_flat``
+    (family scores gathered per unique token), the unpadded
+    ``viterbi_batch`` / ``viterbi2_batch``, then ``assemble_mentions``.
     """
-    flat_toks, flat_starts, flat_ends, seq_ids, seq_lens = tokenize_flat(
-        texts, fine=True
-    )
-    n = len(flat_toks)
-    empty = pd.DataFrame(
-        {
-            "row": pd.Series([], dtype="int64"),
-            "begin_tok": pd.Series([], dtype="int32"),
-            "end_tok": pd.Series([], dtype="int32"),
-            "begin_char": pd.Series([], dtype="int32"),
-            "end_char": pd.Series([], dtype="int32"),
-            "entity_type": pd.Series([], dtype="string"),
-            "surface": pd.Series([], dtype="string"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
-    if n == 0:
-        return empty
-
-    feat_idx = featurize_flat(flat_toks, seq_ids)
-    nonempty = seq_lens > 0
+    toks, starts, ends, seq_ids, seq_lens = tokenize_flat(texts, fine=True)
+    if len(toks) == 0:
+        return pd.DataFrame(
+            {
+                "row": pd.Series([], dtype="int64"),
+                "begin_tok": pd.Series([], dtype="int32"),
+                "end_tok": pd.Series([], dtype="int32"),
+                "begin_char": pd.Series([], dtype="int32"),
+                "end_char": pd.Series([], dtype="int32"),
+                "entity_type": pd.Series([], dtype="string"),
+                "surface": pd.Series([], dtype="string"),
+                "score": pd.Series([], dtype="float64"),
+            }
+        )
     # one emission pass feeds both the Viterbi decode and the span margins
-    emit = emission_scores(model, feat_idx)
-    if hasattr(model, "transition2"):  # order-2 CRF (PSB-2008 best config)
-        labels = viterbi2_batch(emit, seq_lens[nonempty], model.transition2)
-    else:
-        labels = viterbi_batch(emit, seq_lens[nonempty], model.transition)
+    emit = emission_flat(toks, seq_ids, model.emission)
+    labels = viterbi_labels(model, emit, seq_lens)
+    return assemble_mentions(
+        texts, model.fmt, starts, ends, seq_ids, seq_lens, emit, labels, entity_type
+    )
 
+
+def viterbi_labels(model, emit: np.ndarray, seq_lens: np.ndarray) -> np.ndarray:
+    """Flat labels of the model's order: ``viterbi2_batch`` for an order-2
+    model (PSB-2008 best config), else ``viterbi_batch``."""
+    if hasattr(model, "transition2"):
+        return viterbi2_batch(emit, seq_lens, model.transition2)
+    return viterbi_batch(emit, seq_lens, model.transition)
+
+
+def assemble_mentions(
+    texts: pd.Series,
+    fmt: str,
+    flat_starts: np.ndarray,
+    flat_ends: np.ndarray,
+    seq_ids: np.ndarray,
+    seq_lens: np.ndarray,
+    emit: np.ndarray,
+    labels: np.ndarray,
+    entity_type: str = "GENE",
+) -> pd.DataFrame:
+    """Labelled tokens of a non-empty flat batch -> ``recognize_rows``'
+    mention rows: contiguous-tag spans, their mean margin ``score``, and
+    the local abbreviation spans."""
+    n = len(labels)
+    nonempty = seq_lens > 0
     # --- mention assembly (P11): scheme-aware contiguous-run grouping ---
     lab = labels.astype(np.int8)
     is_seq_start = np.zeros(n, dtype=bool)
@@ -126,7 +149,7 @@ def recognize_rows(
     is_seq_end = np.zeros(n, dtype=bool)
     last = np.cumsum(seq_lens[nonempty]) - 1
     is_seq_end[last] = True
-    s_idx, e_pos = labels_to_spans(model.fmt, lab, is_seq_start, is_seq_end)
+    s_idx, e_pos = labels_to_spans(fmt, lab, is_seq_start, is_seq_end)
 
     sent_of = seq_ids[s_idx]
     sent_base = np.concatenate(([0], np.cumsum(seq_lens)[:-1]))
@@ -258,7 +281,12 @@ def link_rows(texts: pd.Series, model: CrfModel, index) -> pd.DataFrame:
     same mentions as ``apply_canonical(link_mentions(detect_mentions(turns)
     .filter(paren_balanced), lexicon), canonical_rep_map(lexicon))``
     without the mention cache and joins between those operators."""
-    men = recognize_rows(texts, model)
+    return link_recognized(recognize_rows(texts, model), index)
+
+
+def link_recognized(men: pd.DataFrame, index) -> pd.DataFrame:
+    """``link_rows`` after recognition: the parenthesis filter, then
+    ``index.link`` on the lowered surfaces."""
     keep = np.fromiter(
         (paren_balanced_py(s) for s in men["surface"]), dtype=bool, count=len(men)
     )

@@ -30,32 +30,51 @@ _SIMPLE_RE = re.compile(r"[A-Za-z0-9]+|[^\sA-Za-z0-9]")
 _FINE_RE = re.compile(r"[A-Z]+(?![a-z])|[A-Z][a-z]*|[a-z]+|[0-9]+|[^\sA-Za-z0-9]")
 
 
+# The code points of the ``re`` ``\s`` class (``str.isspace``), written out
+# rather than found by scanning Unicode at import; tests/test_crf_core.py
+# checks the tuple against ``re`` over every code point.
+_WHITESPACE = (
+    0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20, 0x85, 0xA0,
+    0x1680, 0x2000, 0x2001, 0x2002, 0x2003, 0x2004, 0x2005, 0x2006, 0x2007,
+    0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
+)
+_IS_SPACE = np.zeros(max(_WHITESPACE) + 2, dtype=bool)
+_IS_SPACE[list(_WHITESPACE)] = True
+
+
 def tokenize_flat(
     texts: "pd.Series | list", fine: bool = True
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Tokenize a whole batch in ONE regex pass over a '\\n'-joined
+    """Tokenize a whole batch in ONE ``findall`` over a '\\n'-joined
     megastring (both token classes exclude whitespace, so tokens never
     cross the separator). Returns flat arrays:
     (tokens, starts, ends, seq_ids, seq_lens) with per-text char offsets.
-    ~2x faster than per-text ``finditer`` loops on Arrow-size batches.
+
+    The offsets come from numpy, not from one ``span()`` per match: every
+    non-whitespace character lies in exactly one token and no token holds
+    whitespace, so token k starts at the position of non-whitespace
+    character number (total length of tokens 0..k-1) of the megastring.
     """
     rx = _FINE_RE if fine else _SIMPLE_RE
     tl = [t if isinstance(t, str) else ("" if t is None else str(t)) for t in texts]
     n = len(tl)
-    lens = np.fromiter((len(t) for t in tl), count=n, dtype=np.int64)
+    lens = np.fromiter(map(len, tl), count=n, dtype=np.int64)
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens + 1, out=offsets[1:])  # +1 per '\n' separator
     big = "\n".join(tl)
-    spans = [m.span() for m in rx.finditer(big)]
-    if spans:
-        arr = np.asarray(spans, dtype=np.int64)
-        gs, ge = arr[:, 0], arr[:, 1]
-    else:
-        gs = ge = np.empty(0, dtype=np.int64)
+    found = rx.findall(big)
+    toks = np.empty(len(found), dtype=object)
+    toks[:] = found
+    tok_lens = np.fromiter(map(len, found), count=len(found), dtype=np.int64)
+    # one code point per element, astral characters and lone surrogates too
+    cp = np.frombuffer(big.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    space = _IS_SPACE[np.minimum(cp, len(_IS_SPACE) - 1)]
+    nonspace = np.flatnonzero(~space)
+    gs = nonspace[np.cumsum(tok_lens) - tok_lens]
+    ge = gs + tok_lens
     seq_ids = np.searchsorted(offsets, gs, side="right") - 1
     starts = (gs - offsets[seq_ids]).astype(np.int32)
     ends = (ge - offsets[seq_ids]).astype(np.int32)
-    toks = np.array([big[s:e] for s, e in spans], dtype=object)
     seq_lens = np.bincount(seq_ids, minlength=n).astype(np.int64)
     return toks, starts, ends, seq_ids.astype(np.int64), seq_lens
 

@@ -21,10 +21,11 @@ Two implementations:
   ``run_pipeline`` and ``stream_kg`` run below the lexicon gate. One
   exchange on (conv_id, turn block): each turn lands in its own block of
   ``BLOCK`` turns and, as a halo, in the earlier blocks whose subject
-  turns can reach it. Per block, ``mentions.link_rows`` recognizes and
-  links, then ``pair_mentions`` pairs with role and tool already on the
-  row, keeping only triples whose subject turn the block owns — so no
-  triple comes from two blocks and no distinct runs across partitions.
+  turns can reach it. Per block that owns a turn (``chunk_triples``),
+  ``mentions.link_rows`` recognizes and links, then ``pair_mentions``
+  pairs with role and tool already on the row, keeping only triples whose
+  subject turn the block owns — so no triple comes from two blocks and no
+  distinct runs across partitions.
   Blocks split a hot conversation across tasks.
 - ``assemble_triples`` — a Spark self-join over a linked-mention table
   (pure ``when()`` predicate, whole-stage codegen, no Python), for the
@@ -284,6 +285,41 @@ def whole_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield carry
 
 
+def chunk_triples(rows: pd.DataFrame, model, index, window_turns: int) -> pd.DataFrame:
+    """The per-chunk body of ``block_triples``: block rows of whole
+    (conv_id, blk) groups, each group's rows contiguous as ``whole_groups``
+    yields them -> TRIPLES rows.
+
+    Groups that own no turn are dropped first: every triple's subject turn
+    is owned by its group, so such a group (block -1 below a conversation
+    that starts at turn 0, or a block that only halo turns reach across a
+    gap) can emit nothing, and the CRF need not run on it. Then
+    ``mentions.link_rows`` runs once per remaining row (halo copies
+    included) and ``pair_mentions`` keeps the triples whose subject turn
+    the block owns."""
+    from .mentions import link_rows
+
+    conv, blk = rows["conv_id"].to_numpy(), rows["blk"].to_numpy()
+    first = np.ones(len(rows), dtype=bool)
+    first[1:] = (conv[1:] != conv[:-1]) | (blk[1:] != blk[:-1])
+    group = np.cumsum(first) - 1
+    owns = np.bincount(group, weights=rows["own"].to_numpy(dtype=bool)) > 0
+    rows = rows[owns[group]]
+    men = link_rows(rows["text"], model, index)
+    row = men["row"].to_numpy()
+    meta = [c for c in rows.columns if c != "text"]
+    return pair_mentions(
+        pd.DataFrame(
+            {c: rows[c].to_numpy()[row] for c in meta}
+            | {
+                "begin_char": men["begin_char"].to_numpy(),
+                "canonical": men["canonical"].to_numpy(dtype=object),
+            }
+        ),
+        window_turns,
+    )
+
+
 def block_triples(
     turns: DataFrame, bc, window_turns: int = 2, new_col: str | None = None
 ) -> DataFrame:
@@ -295,15 +331,13 @@ def block_triples(
     exchange is ``repartition(n, conv_id, blk)`` at the explicit
     ``spark.sql.shuffle.partitions`` width (AQE may not fold it into one
     task), sorted within partitions so that ``whole_groups`` can cut the
-    Arrow batches at group edges. Per chunk of whole groups,
-    ``mentions.link_rows`` runs once per input row (halo copies included)
-    and ``pair_mentions`` keeps the triples whose subject turn the block
-    owns. ``new_col`` names a boolean column: only mentions of rows with
-    it set become objects (the stream's new turns; subjects may come from
-    the tail). ``bc`` comes from ``mentions.fused_broadcast``. Assumes
+    Arrow batches at group edges. Each chunk of whole groups goes through
+    ``chunk_triples``. ``new_col`` names a boolean column: only mentions
+    of rows with it set become objects (the stream's new turns; subjects
+    may come from the tail). ``bc`` comes from ``mentions.fused_broadcast``. Assumes
     (conv_id, turn_idx) is a key of ``turns``, as ``assemble_triples``'s
     role join does."""
-    from .mentions import _load_model_bytes, link_rows
+    from .mentions import _load_model_bytes
 
     n = int(turns.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     t = F.col("turn_idx")
@@ -324,24 +358,12 @@ def block_triples(
         .repartition(n, "conv_id", "blk")
         .sortWithinPartitions("conv_id", "blk")
     )
-    meta = ["conv_id", "blk", "turn_idx", "role", "tool", "own"] + (["new"] if new_col else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         blob, index = bc.value
         model = _load_model_bytes(blob)
         for rows in whole_groups(batches):
-            men = link_rows(rows["text"], model, index)
-            row = men["row"].to_numpy()
-            out = pair_mentions(
-                pd.DataFrame(
-                    {c: rows[c].to_numpy()[row] for c in meta}
-                    | {
-                        "begin_char": men["begin_char"].to_numpy(),
-                        "canonical": men["canonical"].to_numpy(dtype=object),
-                    }
-                ),
-                window_turns,
-            )
+            out = chunk_triples(rows, model, index, window_turns)
             if len(out):
                 yield out
 

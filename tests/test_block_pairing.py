@@ -49,10 +49,15 @@ def corpora(draw):
 
 
 def _block_rows(turns, mentions, block, window, seed):
-    """Each mention once per block of its turn (halo rule), with ``own``
-    on its own block's copy; grouped by (conv_id, blk) in order, rows in
+    """The mentions, with their turn's role and tool, in ``_halo_copies``'
+    block layout."""
+    return _halo_copies(mentions.merge(turns, on=["conv_id", "turn_idx"]), block, window, seed)
+
+
+def _halo_copies(rows, block, window, seed):
+    """Each row once per block of its turn (halo rule), with ``own`` on
+    its own block's copy; grouped by (conv_id, blk) in order, rows in
     random order within a group — the order the sorted exchange gives."""
-    rows = mentions.merge(turns, on=["conv_id", "turn_idx"])
     t = rows["turn_idx"].to_numpy()
     first, home = (t - window) // block, t // block
     reps = home - first + 1
@@ -107,3 +112,73 @@ def test_block_pairing_new_objects_complete_the_stream(corpus, split):
     assert got | old == _oracle(mentions, turns, window)
     # every emitted window reaches a new turn
     assert all(t[1] + window >= split for t in got)
+
+
+def test_chunk_triples_skips_groups_that_own_no_turn(lexicon_pdf, monkeypatch):
+    """``chunk_triples`` (the per-chunk body of ``block_triples``) never
+    hands a (conv_id, blk) group without an owned row to ``link_rows``,
+    and its triples are the same with those groups in the input or
+    removed beforehand, and equal the loop oracle. Turn indices start at
+    0, below 0 and after gaps, so ownerless groups arise from the block
+    below a conversation's first turn and from halo-only blocks across a
+    gap."""
+    from reach_banner_spark.fixtures import ensure_model, make_turns
+    from reach_banner_spark.operators import mentions as mentions_mod
+    from reach_banner_spark.operators.crf import CrfModel
+    from reach_banner_spark.operators.linking import canonical_reps_pandas, lexicon_index
+    from reach_banner_spark.operators.triples import chunk_triples, whole_groups
+
+    model = CrfModel.load_npz(ensure_model())
+    index = lexicon_index(lexicon_pdf).with_reps(canonical_reps_pandas(lexicon_pdf))
+    turns, _ = make_turns(n_convs=8, skew_conv_turns=30, seed=3, lexicon=lexicon_pdf)
+    rng = np.random.default_rng(0)
+    turns = turns[rng.random(len(turns)) > 0.3].reset_index(drop=True)  # gaps
+    # every other conversation starts at turn -7
+    convs = sorted(set(turns["conv_id"]))
+    turns["turn_idx"] += turns["conv_id"].map({c: -7 * (i % 2) for i, c in enumerate(convs)})
+    turns = turns[["conv_id", "turn_idx", "text", "role", "tool"]]
+    block, window = 4, 2
+    rows = _halo_copies(turns, block, window, seed=1)
+    owning = rows.groupby(["conv_id", "blk"])["own"].transform("any").to_numpy()
+    assert (~owning).any()
+
+    real = mentions_mod.link_rows
+    seen = []
+
+    def spy(texts, model, index):
+        seen.append(texts.index.to_numpy())
+        return real(texts, model, index)
+
+    monkeypatch.setattr(mentions_mod, "link_rows", spy)
+
+    def run(frame, cuts):
+        edges = sorted({min(c, len(frame)) for c in cuts} | {0, len(frame)})
+        batches = [frame.iloc[a:b] for a, b in zip(edges, edges[1:])]
+        outs, linked = [], 0
+        for chunk in whole_groups(iter(batches)):
+            seen.clear()
+            outs.append(chunk_triples(chunk, model, index, window))
+            reached = np.concatenate(seen)
+            owns = chunk.groupby(["conv_id", "blk"])["own"].transform("any")
+            assert owns.loc[reached].all()
+            linked += len(reached)
+        got = pd.concat(outs, ignore_index=True)[TRIPLE_COLS]
+        return [tuple(r) for r in got.itertuples(index=False, name=None)], linked
+
+    with_all, linked = run(rows, [17, 40, 41, 300])
+    assert linked == owning.sum()
+    without, _ = run(rows[owning].reset_index(drop=True), [5, 90])
+    assert len(with_all) == len(set(with_all)) and with_all
+    assert set(with_all) == set(without)
+
+    men = real(turns["text"], model, index)
+    row = men["row"].to_numpy()
+    mentions = pd.DataFrame(
+        {
+            "conv_id": turns["conv_id"].to_numpy()[row],
+            "turn_idx": turns["turn_idx"].to_numpy()[row],
+            "begin_char": men["begin_char"].to_numpy(),
+            "canonical": men["canonical"].to_numpy(dtype=object),
+        }
+    )
+    assert set(with_all) == _oracle(mentions, turns, window)

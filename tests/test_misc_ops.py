@@ -306,8 +306,8 @@ def test_recognize_batch_throughput_floor(model_path, lexicon_pdf):
     """Per-batch micro-benchmark for the mention core (r2 VERDICT #6):
     rows/sec of recognize_batch on a fixed 10k-turn batch, so a real
     featurizer/decoder regression is distinguishable from VM noise in the
-    end-to-end bench. Threshold is GENEROUS (~5x below the warm steady
-    state measured on this box) — it catches order-of-magnitude
+    end-to-end bench. Threshold is GENEROUS (over 10x below the warm
+    steady state measured on a 4-vCPU host) — it catches order-of-magnitude
     regressions, not epoch jitter."""
     import time
 
@@ -328,7 +328,8 @@ def test_recognize_batch_throughput_floor(model_path, lexicon_pdf):
         best = min(best, time.perf_counter() - t0)
     assert len(out) > 0
     rows_per_sec = len(batch) / best
-    # warm steady state on this box: ~12.7k rows/s single-core; floor at 2.5k
+    # warm steady state on a 4-vCPU host: ~38-44k rows/s single-core
+    # (~15-16k before the flat CRF kernels); floor at 2.5k
     assert rows_per_sec > 2_500, f"mention core at {rows_per_sec:.0f} rows/s"
 
 

@@ -71,6 +71,48 @@ def test_feature_hash_stability():
     assert (hash_str_array(arr) == idx).all()
 
 
+def test_fnv64_array_equals_scalar_fnv_in_flat_memory():
+    """Per string == ``fnv1a_bytes`` (empty, non-ASCII and astral strings,
+    lengths on both sides of the vectorized/scalar switch), and
+    ``hash_str_array`` is its ``% space``. 5,000 short tokens plus one
+    100k-char token stay within a few MB: the old (n, longest) byte
+    matrix and its mask took ~0.5 GB for that batch."""
+    import random
+    import tracemalloc
+
+    from reach_banner_spark.functions.hashing import (
+        fnv1a_bytes,
+        fnv64_array,
+        hash_str_array,
+    )
+
+    rng = random.Random(5)
+    alphabet = "abcXYZ019 -éß中\U0001F600"
+    strings = ["", "a", "é", "\U0001F600", "x" * 40, "中" * 33]
+    strings += ["".join(rng.choices(alphabet, k=rng.choice([0, 1, 3, 8, 31, 32, 33, 90])))
+                for _ in range(300)]
+    arr = np.array(strings, dtype=object)
+    got = fnv64_array(arr)
+    assert got.dtype == np.uint64
+    assert got.tolist() == [fnv1a_bytes(s.encode("utf-8")) for s in strings]
+    assert hash_str_array(arr, 1000).tolist() == [int(h) % 1000 for h in got.tolist()]
+    assert fnv64_array(np.array([], dtype=object)).shape == (0,)
+
+    batch = np.array(
+        ["".join(rng.choices(alphabet, k=rng.randint(1, 12))) for _ in range(5000)]
+        + ["q" * 100_000],
+        dtype=object,
+    )
+    tracemalloc.start()
+    try:
+        h = fnv64_array(batch)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert h[-1] == fnv1a_bytes(batch[-1].encode())
+    assert peak < 4 * 2**20, f"peak {peak / 2**20:.1f} MB"
+
+
 def test_char3_shingle_vectorized_equals_reference():
     """The megabuffer FNV fast path must match the per-string reference
     twin EXACTLY (ids and order), including edge cases and non-ASCII
