@@ -28,7 +28,10 @@ Scale design:
 
 ``LEX_GATE`` is read at call time by ``local_lexicon`` alone, so every
 operator (linking, canonicalization, the fused pass) takes the same side
-of the gate, and tests can move it.
+of the gate, and tests can move it. A caller that has already taken the
+gate (``run_pipeline`` and ``stream_kg``, through ``fused_broadcast``)
+calls ``link_mentions_distributed`` directly instead of fetching the
+lexicon again.
 
 The pandas-level helpers (shingles / signatures / bands) are shared with
 fixtures.py so golden linking output is identical by construction.
@@ -406,7 +409,8 @@ def link_mentions(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
     are ``LexiconIndex.link`` inside ONE mapInPandas over the mentions,
     against a broadcast ``lexicon_index``: no join, no shuffle. Above it,
     an exact join plus the distributed band-join twin
-    (``fuzzy_best_distributed``) run, without broadcast hints.
+    (``fuzzy_best_distributed``) run, without broadcast hints
+    (``link_mentions_distributed``).
     """
     lex_pdf = local_lexicon(lexicon)
     if lex_pdf is not None:
@@ -428,7 +432,13 @@ def link_mentions(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
             + [T.StructField("entity_id", T.LongType()), T.StructField("canonical", T.StringType())]
         )
         return mentions.mapInPandas(run, schema=schema)
+    return link_mentions_distributed(mentions, lexicon)
 
+
+def link_mentions_distributed(mentions: DataFrame, lexicon: DataFrame) -> DataFrame:
+    """``link_mentions`` above ``LEX_GATE``, for a caller that has already
+    taken the gate: the exact join, then ``fuzzy_best_distributed`` for
+    the surfaces it leaves unlinked."""
     lex = _dedup_lex(lexicon)
     m = mentions.withColumn("surface_key", F.lower(F.col("surface")))
     exact = m.join(lex, m["surface_key"] == lex["alias_key"], "left").drop(

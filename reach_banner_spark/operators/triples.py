@@ -263,26 +263,30 @@ def pair_mentions(men: pd.DataFrame, window_turns: int) -> pd.DataFrame:
 
 
 def whole_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Re-cut batches sorted by (conv_id, blk) at group edges: yields
-    chunks of whole groups and carries only the last, possibly incomplete
-    group into the next batch (never a whole partition)."""
-    carry = None
+    """Re-cut batches sorted by (conv_id, blk) at group edges. Each batch
+    is held until the next one arrives or the input ends, so a partition
+    that arrives as one batch is one chunk. When the next batch continues
+    the held batch's last group, only that group is carried into it
+    (never a whole partition); every chunk holds whole groups and there
+    are at most as many chunks as batches."""
+    held = None
     for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
         if not len(pdf):
             continue
-        conv, blk = pdf["conv_id"].to_numpy(), pdf["blk"].to_numpy()
-        last = (conv == conv[-1]) & (blk == blk[-1])
-        if last.all():
-            carry = pdf
+        if held is None:
+            held = pdf
             continue
-        cut = len(pdf) - int(np.argmin(last[::-1]))
-        yield pdf.iloc[:cut]
-        carry = pdf.iloc[cut:]
-    if carry is not None:
-        yield carry
+        conv, blk = held["conv_id"].to_numpy(), held["blk"].to_numpy()
+        if pdf["conv_id"].iat[0] != conv[-1] or pdf["blk"].iat[0] != blk[-1]:
+            yield held
+            held = pdf
+            continue
+        cut = len(held) - int(((conv == conv[-1]) & (blk == blk[-1])).sum())
+        if cut:
+            yield held.iloc[:cut]
+        held = pd.concat([held.iloc[cut:], pdf], ignore_index=True)
+    if held is not None:
+        yield held
 
 
 def chunk_triples(rows: pd.DataFrame, model, index, window_turns: int) -> pd.DataFrame:

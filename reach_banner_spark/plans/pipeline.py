@@ -26,7 +26,10 @@ keeps that four-stage composition: its stage tables are the resume
 points. Below the gate its linking is the same ``LexiconIndex.link`` the
 block pass runs (one mapInPandas, no shuffle), and its canonicalization
 is the same ``canonical_reps_pandas``; ``linking.local_lexicon`` decides
-the side of the gate for every operator, at call time.
+the side of the gate for every operator, at call time. ``run_pipeline``
+and ``stream_kg`` decide it once, in ``fused_broadcast``; above the gate
+they call the distributed bodies (``link_mentions_distributed``,
+``canonical_rep_map_distributed``) directly.
 
 Skew note (G5): transcript corpora have hot conversations (one conv with
 1000x the median turns). The block key (conv_id, turn_idx // BLOCK)
@@ -46,7 +49,7 @@ from ..operators.components import connected_components
 from ..operators.linking import (
     canonical_reps_pandas,
     entity_edges,
-    link_mentions,
+    link_mentions_distributed,
     local_lexicon,
 )
 from ..operators.mentions import detect_mentions, fused_broadcast, paren_balanced
@@ -100,6 +103,13 @@ def canonical_rep_map(spark, lexicon: DataFrame) -> DataFrame | None:
         # ~6 tiny Spark jobs whose fixed scheduling cost would dominate
         rep_pdf = canonical_reps_pandas(lex_pdf)
         return None if rep_pdf is None else spark.createDataFrame(rep_pdf)
+    return canonical_rep_map_distributed(lexicon)
+
+
+def canonical_rep_map_distributed(lexicon: DataFrame) -> DataFrame:
+    """``canonical_rep_map`` above ``LEX_GATE``, for a caller that has
+    already taken the gate: distributed components over
+    ``entity_edges``, each joined to its representative's canonical."""
     comp = connected_components(entity_edges(lexicon))
     id2canon = (
         lexicon.select("entity_id", "canonical")
@@ -144,9 +154,14 @@ def run_pipeline(
     # is persisted AND materialized first — a lazy cache would let every
     # branch recompute the Arrow UDF. Pruned before the salt shuffle,
     # which would otherwise move role/tool/ts bytes the CRF never reads.
+    # ``fused_broadcast`` has already taken the gate, so the distributed
+    # linking and representative bodies run without fetching it again.
     salted = salt_repartition(turns.select("conv_id", "turn_idx", "text"))
     mentions = persist_swap(
         detect_mentions(salted, model_path).filter(paren_balanced("surface"))
     )
-    linked = canonicalize(link_mentions(mentions, lexicon), lexicon)
+    linked = apply_canonical(
+        link_mentions_distributed(mentions, lexicon),
+        canonical_rep_map_distributed(lexicon),
+    )
     return assemble_triples(linked, turns, window_turns=window_turns)

@@ -71,12 +71,15 @@ def _halo_copies(rows, block, window, seed):
     return out.sort_values(["conv_id", "blk"], kind="stable").reset_index(drop=True)
 
 
+def _batches(rows, cuts):
+    edges = sorted({min(c, len(rows)) for c in cuts} | {0, len(rows)})
+    return [rows.iloc[a:b] for a, b in zip(edges, edges[1:])]
+
+
 def _run_blocks(rows, window, cuts):
     from reach_banner_spark.operators.triples import pair_mentions, whole_groups
 
-    edges = sorted({min(c, len(rows)) for c in cuts} | {0, len(rows)})
-    batches = [rows.iloc[a:b] for a, b in zip(edges, edges[1:])]
-    outs = [pair_mentions(chunk, window) for chunk in whole_groups(iter(batches))]
+    outs = [pair_mentions(chunk, window) for chunk in whole_groups(iter(_batches(rows, cuts)))]
     got = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=TRIPLE_COLS)
     return [tuple(r) for r in got[TRIPLE_COLS].itertuples(index=False, name=None)]
 
@@ -91,11 +94,26 @@ def _oracle(mentions, turns, window):
 @settings(max_examples=150, deadline=None)
 @given(corpora())
 def test_block_pairing_equals_loop_oracle(corpus):
+    from reach_banner_spark.operators.triples import whole_groups
+
     turns, mentions, block, window, cuts, seed = corpus
-    got = _run_blocks(_block_rows(turns, mentions, block, window, seed), window, cuts)
+    rows = _block_rows(turns, mentions, block, window, seed)
+    got = _run_blocks(rows, window, cuts)
     # each triple from exactly one block: no distinct across blocks needed
     assert len(got) == len(set(got))
     assert set(got) == _oracle(mentions, turns, window)
+    # chunks are cut at group edges only, at most one per input batch, and
+    # a partition that arrives as one batch is one chunk
+    batches = _batches(rows, cuts)
+    chunks = list(whole_groups(iter(batches)))
+    assert len(chunks) <= len(batches)
+    assert len(list(whole_groups(iter([rows])))) == int(len(rows) > 0)
+    if chunks:
+        pd.testing.assert_frame_equal(
+            pd.concat(chunks, ignore_index=True), rows.reset_index(drop=True)
+        )
+    groups = [set(zip(c["conv_id"], c["blk"])) for c in chunks]
+    assert sum(map(len, groups)) == len(set().union(*groups))
 
 
 @settings(max_examples=100, deadline=None)

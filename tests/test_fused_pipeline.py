@@ -170,7 +170,7 @@ def test_run_pipeline_above_index_gate_same_triples(
     lexicon = spark.createDataFrame(lexicon_pdf, schema=schemas.LEXICON)
     fused = set(pipeline.run_pipeline(turns, lexicon, model_path).collect())
 
-    calls = {"fuzzy_best_distributed": 0, "connected_components": 0}
+    calls = {"fuzzy_best_distributed": 0, "connected_components": 0, "local_lexicon": 0}
 
     def counted(module, name):
         real = getattr(module, name)
@@ -183,9 +183,17 @@ def test_run_pipeline_above_index_gate_same_triples(
 
     counted(linking, "fuzzy_best_distributed")
     counted(pipeline, "connected_components")
+    # the gate is taken once per call; both modules that bind
+    # local_lexicon count into the same slot
+    counted(linking, "local_lexicon")
+    counted(pipeline, "local_lexicon")
     monkeypatch.setattr(linking, "LEX_GATE", 0)
     composed = set(pipeline.run_pipeline(turns, lexicon, model_path).collect())
-    assert calls == {"fuzzy_best_distributed": 1, "connected_components": 1}, calls
+    assert calls == {
+        "fuzzy_best_distributed": 1,
+        "connected_components": 1,
+        "local_lexicon": 1,
+    }, calls
     assert fused and fused == composed
 
 
