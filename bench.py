@@ -40,9 +40,6 @@ N_CONVS = int(os.environ.get("RBS_BENCH_CONVS", "3000"))
 TRIALS = max(1, int(os.environ.get("RBS_BENCH_TRIALS", "3")))
 SKEW_TURNS = 3000
 
-# Totals are not comparable to BENCH_r0*.json without subtracting the
-# event-analytics keys those rounds timed: that family was retired from
-# queries() together with its module.
 HEADLINE = [
     "agg_hash",
     "join_sortmerge",
@@ -88,6 +85,9 @@ HEADLINE = [
     # r5b additions (second r5 session) — event analytics + KG export +
     # walk corpus (subtract this group too for earlier-round-comparable
     # subtotals)
+    "funnel_conversion",
+    "retention_cohort",
+    "event_transitions",
     "kg_export_nquads",
     "kg_adjacency",
     "kg_random_walks",
@@ -114,9 +114,11 @@ HEADLINE = [
     "kg_sample_neighbors",
     "sketch_hll_merge",
     "macro_data_prep",
+    "events_anomaly",
     # r5f additions (seventh r5 session) — attribution + entity cards +
     # exact-stats corr + correlated subquery + the IVF-PQ composition
     # (subtract this group too for earlier-round-comparable subtotals)
+    "events_attribution",
     "kg_entity_cards",
     "agg_stats_corr",
     "filter_subquery_correlated",
@@ -130,7 +132,10 @@ HEADLINE = [
     "kg_hits",
     "bpe_encode",
     "win_fill_forward",
+    "events_rolling_dau",
+    "scd2_intervals",
     "fn_url",
+    "calendar_densify",
     "macro_kg_report",
     "agg_bitmap_distinct",
     "join_null_safe",
@@ -145,26 +150,39 @@ HEADLINE = [
     "fn_conditional",
     "fn_encode",
     "agg_histogram",
+    "events_streaks",
+    "events_rfm",
     "dedup_url",
     "sketch_bloom",
     "corpus_length_dist",
     "mix_sample",
+    "events_journey_paths",
     "kg_diameter",
+    "join_temporal",
+    "events_ab_test",
     "kg_growth",
     "fn_editdistance",
     "agg_moments",
+    "events_forecast",
     "lm_bigram",
     "kg_reciprocity",
     "fn_mask",
+    "events_trend",
+    "events_seasonality",
+    "events_gaps",
     "win_running_distinct",
     "kg_assortativity",
     "fn_variant",
     "agg_listagg",
     "basket_pairs",
     "source_orc",
+    "events_daily_growth",
     "fn_collation",
     "macro_market_share",
     "merge_upsert",
+    "cdc_apply",
+    "snapshot_diff",
+    "zorder_key",
     "fn_xml",
     "kg_provenance",
     "kg_canonical_facts",
@@ -174,10 +192,12 @@ HEADLINE = [
     # islands/pareto/concurrency/benford, RRF fusion, DPP join, weighted
     # stats (subtract this group too for earlier-round-comparable
     # subtotals)
+    "events_enrich",
     "source_binary",
     "macro_local_supplier_volume",
     "macro_returned_items",
     "macro_promo_share",
+    "events_funnel_window",
     "text_normalize",
     "macro_pricing_summary",
     "macro_order_priority",
@@ -193,6 +213,9 @@ HEADLINE = [
     "scan_metadata",
     "compact_small_files",
     "table_profile",
+    "events_islands",
+    "events_pareto",
+    "events_concurrency",
     "events_benford",
     "retrieval_rrf",
     "agg_weighted_stats",
@@ -206,6 +229,7 @@ HEADLINE = [
     "sql_table_udf",
     "sql_session_variables",
     "sql_execute_immediate",
+    "events_lifecycle",
     "udf_map_arrow",
     "udf_grouped_arrow",
     "udtf_polymorphic",
@@ -214,33 +238,47 @@ HEADLINE = [
     # earlier-round-comparable subtotals)
     "macro_shipmode_priority",
     "macro_waiting_suppliers",
+    "events_stickiness",
     "kg_betweenness",
     # r5k additions (twelfth r5 session) — CUSUM break, lag-1 ACF, SQL
     # pipe syntax (subtract this group too for earlier-round-comparable
     # subtotals)
+    "events_changepoint",
+    "events_autocorr",
     "sql_pipe_syntax",
     "kg_closeness",
     "kg_bridges",
     "kg_articulation",
     "emb_quantize_int8",
     "index_inverted",
+    "events_srm",
     "kg_components",
     "lm_freq_of_freqs",
+    "events_cuped",
     "chunk_overlap",
     "kg_mst",
+    "win_frame_range_time",
     "source_csv_corrupt",
     "scan_agg_pushdown",
     "udf_scalar_iter",
     "dedup_containment",
+    "events_outlier_mad",
     "kg_conv_similarity",
     "dedup_lines",
+    "events_ewma",
     "macro_graph_health",
+    "macro_experiment_report",
     # r5l additions (thirteenth r5 session) — eccentricity/SCC kernels,
     # DiD/power/KS/MWU/concentration stats, KN smoothing, MRR/MMR
     # retrieval, SymSpell fuzzy join (subtract this group too for
     # earlier-round-comparable subtotals)
     "kg_eccentricity",
     "kg_scc",
+    "events_did",
+    "events_power",
+    "events_concentration",
+    "events_ks_test",
+    "events_mann_whitney",
     "retrieval_mrr",
     "retrieval_mmr",
     "lm_kneser_ney",
@@ -250,25 +288,35 @@ HEADLINE = [
     # eval, held-out coverage, the hop plot, and the one-pass retrieval
     # report (subtract this group too for earlier-round-comparable
     # subtotals)
+    "events_survival",
+    "events_spearman",
+    "events_chi2",
+    "events_theil_sen",
     "retrieval_ndcg",
     "retrieval_pr_at_k",
     "lm_coverage",
     "kg_path_length_dist",
     "macro_retrieval_report",
+    "events_winsorized_mean",
     "kg_k_truss",
     "emb_knn_graph",
     "emb_cluster_knn",
     "scan_bucket_pruned",
+    "macro_series_profile",
     "sql_group_by_all",
     "fn_luhn",
     "agg_grouping_id",
     "kg_shortest_path",
     # r5n additions (fourteenth session) — Kendall tau-b, MAP@10
     # (subtract this group too for earlier-round-comparable subtotals)
+    "events_kendall",
     "retrieval_map",
     # r5o additions (fifteenth session) — Holt smoothing, Cramér's V,
     # runs test (subtract this group too for earlier-round-comparable
     # subtotals)
+    "events_holt",
+    "events_cramers_v",
+    "events_runs_test",
     "retrieval_err",
     "eval_cohen_kappa",
     "text_readability",
@@ -280,14 +328,24 @@ HEADLINE = [
     "mix_temperature",
     "macro_dedup_report",
     "emb_hard_negatives",
+    "events_jackknife",
+    "events_deciles",
     "kg_ppr",
     "retrieval_recall_at_k",
     "lm_zipf_profile",
     "macro_text_report",
+    "events_anova",
     "sql_order_by_all",
+    "events_tukey_fences",
     "lm_heaps_profile",
     "emb_norm_profile",
+    "events_dispersion",
+    "events_bowley_skew",
+    "events_lorenz",
     "fn_width_bucket",
+    "macro_daily_health",
+    "events_wilcoxon",
+    "events_sign_test",
     "kg_transitivity",
     "quality_gopher_rules",
     "pack_ffd",
@@ -295,59 +353,101 @@ HEADLINE = [
     "fn_sentences",
     "curriculum_order",
     "kg_degree_centralization",
+    "events_hourly_profile",
     "eval_lang_confusion",
     "kg_pred_cooccur",
+    "macro_amount_profile",
     # r5p additions (sixteenth session) — Mann-Kendall trend,
     # Kruskal-Wallis, Brown-Forsythe (subtract this group too for
     # earlier-round-comparable subtotals)
+    "events_mann_kendall",
+    "events_kruskal",
+    "events_levene",
     "kg_four_cliques",
     "kg_preferential_attachment",
     "lm_collocations",
     "fn_aes_roundtrip",
     "emb_dim_stats",
+    "events_friedman",
     "mix_epochs",
     # r5q additions (seventeenth session) — McNemar, Cochran's Q,
     # Simpson diversity, RBP/bpref/interpolated-PR retrieval, harmonic
     # centrality, Salton/Sorensen link indices, global efficiency
     # (subtract this group too for earlier-round-comparable subtotals)
+    "events_mcnemar",
+    "events_cochran_q",
+    "events_simpson",
     "retrieval_rbp",
     "retrieval_bpref",
     "retrieval_interp_pr",
     "kg_salton_sorensen",
     "kg_harmonic",
     "kg_efficiency",
+    "events_drawdown",
     "sketch_kmv",
     "fn_interval",
     "sql_hints",
     "sql_unpivot",
     "scan_nested_prune",
     "join_interval_overlap",
+    "events_bollinger",
     "kg_condensation",
+    "events_rsi",
     "dataset_fingerprint",
+    "macro_session_report",
     "lm_stupid_backoff",
     "emb_prefix_recall",
+    "events_holt_winters",
     "join_band",
     "kg_edge_betweenness",
     "kg_modularity",
     "macro_tokenizer_report",
     # r5r additions (eighteenth session) — Cliff's delta, Cohen's d
     # (subtract this group too for earlier-round-comparable subtotals)
+    "events_cliff_delta",
+    "events_cohens_d",
+    "events_odds_ratio",
+    "events_gini",
     "lm_yule_k",
     "win_percent_rank",
     "fn_levenshtein",
     # r5s additions (nineteenth session) — cohort LTV curve, native XML
     # source (subtract this group too for earlier-round-comparable
     # subtotals)
+    "events_cohort_ltv",
     "source_xml",
+    # r5t additions (twentieth session) — Durbin-Watson, Hellinger
+    # distance, Nelson-Aalen hazard (subtract this group too for
+    # earlier-round-comparable subtotals)
+    "events_durbin_watson",
+    "events_hellinger",
+    "events_nelson_aalen",
     # r5u additions (twenty-first session) — TV/Wasserstein distances,
     # ordinal association, PACF/Ljung-Box/Pettitt diagnostics (subtract
     # this group too for earlier-round-comparable subtotals)
+    "events_tv_distance",
+    "events_wasserstein",
+    "events_gamma",
+    "events_pacf",
+    "events_ljung_box",
+    "events_pettitt",
+    "events_cochran_armitage",
     "kg_avg_neighbor_degree",
     "retrieval_r_precision",
+    "macro_serial_report",
+    "events_page",
+    "events_turning_points",
+    "events_mk_seasonal",
     "kg_clustering_curve",
+    "events_records",
     "dedup_cross_split",
     "emb_isotropy",
+    "events_quade",
+    "events_acf_profile",
     "corpus_split_budget",
+    "macro_randomness_report",
+    "events_cross_correlation",
+    "events_interrupted_ts",
 ]
 
 

@@ -20,6 +20,10 @@ Scale notes (100 TB discipline): every key here shuffles user_id-first,
 so the event fact table partitions by its natural key and the windows /
 self-joins reuse one co-partitioning; the final rollups are
 dimension-sized (steps × 1, cohorts × weeks, event-type²).
+
+The ``stream_*`` twins that the docstrings below name were retired from
+``streaming/ops.py``; the rollups once shared with them now have the
+batch key as their only caller.
 """
 
 from __future__ import annotations

@@ -17,12 +17,13 @@ def _registries() -> list[dict[str, tuple[QueryFn, str | None]]]:
     # Unconditional imports: a broken transitive import must fail loudly
     # rather than silently shrink the graded queries() contract
     # (tests/test_plans.py pins the total key count as a second guard).
-    from . import kg_queries, relational
+    from . import events_analytics, kg_queries, relational
     from ..operators import dedup, multimodal, similarity, textstats
     from ..streaming import ops as stream_ops
 
     return [
         relational.REGISTRY,
+        events_analytics.REGISTRY,
         kg_queries.REGISTRY,
         dedup.REGISTRY,
         similarity.REGISTRY,

@@ -117,13 +117,13 @@ def test_registry_key_count_pinned():
     shrink — a broken transitive import now raises (registry imports are
     unconditional), and this pin catches accidental key removal. A family
     retired on purpose lowers the pin by exactly its key count (the
-    event-analytics family took 189 keys, 107 of them oracled)."""
+    event-analytics stream twins took 82 keys, none of them oracled)."""
     from reach_banner_spark.plans import registry
 
     q = registry.all_queries()
     o = registry.all_oracle_sql()
-    assert len(q) >= 369, f"queries() shrank: {len(q)} keys"
-    assert len(o) >= 306, f"oracle_sql() shrank: {len(o)} keys"
+    assert len(q) >= 476, f"queries() shrank: {len(q)} keys"
+    assert len(o) >= 413, f"oracle_sql() shrank: {len(o)} keys"
     assert set(o) <= set(q)
 
 
@@ -193,6 +193,26 @@ def test_link_plan_single_fact_shuffle(spark, small_turns, lexicon_pdf, model_pa
     assert not exchanges, "linking added an Exchange:\n" + "\n".join(exchanges)
     assert after.count("MapInPandas") == before.count("MapInPandas") + 1, after
     assert after.lstrip().startswith("MapInPandas"), after
+
+
+def test_funnel_plan_two_exchanges(spark):
+    """funnel_conversion's physical plan is exactly TWO exchanges (the
+    per-user conditional-min hash aggregation + the single-row global
+    sum) — no joins, no windows, regardless of event volume (the scale
+    claim in its docstring, pinned)."""
+    import __spark_entry__ as em
+
+    df = em.queries()["funnel_conversion"](spark, "/root/testdata/sf0.01")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    shuffles = [
+        line
+        for line in plan.splitlines()
+        if "Exchange hashpartitioning" in line
+        or "Exchange rangepartitioning" in line
+        or "Exchange SinglePartition" in line
+    ]
+    assert len(shuffles) == 2, "expected 2 Exchanges:\n" + "\n".join(shuffles)
+    assert "Join" not in plan and "Window" not in plan
 
 
 def test_macro_query_plan_shape(spark):

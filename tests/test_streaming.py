@@ -500,33 +500,12 @@ def test_stream_ann_equals_batch(spark):
 def test_stream_streaks_equals_batch(spark):
     """stream_streaks' merged-run state rolls up to EXACTLY the batch
     gaps-and-islands answer (interval union is associative, so any
-    micro-batch split of events yields the same maximal runs). The batch
-    answer is the one-shot ``day - row_number()`` island key over the
-    static events table. Re-run identical."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
+    micro-batch split of events yields the same maximal runs).
+    Re-run identical."""
+    from reach_banner_spark.plans.events_analytics import (
+        REGISTRY as EV_REGISTRY,
+    )
     from reach_banner_spark.streaming import ops
-
-    def batch_streaks():
-        du = (
-            _batch_events(spark)
-            .select("user_id", F.to_date("ts").alias("day"))
-            .distinct()
-        )
-        w = Window.partitionBy("user_id").orderBy("day")
-        runs = (
-            du.select(
-                "user_id", F.date_sub("day", F.row_number().over(w)).alias("grp")
-            )
-            .groupBy("user_id", "grp")
-            .agg(F.count(F.lit(1)).alias("len"))
-        )
-        return runs.groupBy("user_id").agg(
-            F.max("len").alias("best_streak"),
-            F.count(F.lit(1)).alias("n_streaks"),
-            F.sum("len").alias("active_days"),
-        )
 
     def canon(df):
         return (
@@ -537,7 +516,7 @@ def test_stream_streaks_equals_batch(spark):
         )
 
     got = canon(ops.REGISTRY["stream_streaks"][0](spark, SF))
-    want = canon(batch_streaks())
+    want = canon(EV_REGISTRY["events_streaks"][0](spark, SF))
     assert len(got) == len(want) > 0
     assert got.equals(want)
 
